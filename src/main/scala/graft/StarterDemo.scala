@@ -1,8 +1,14 @@
 package graft
 
+import java.sql.DriverManager
+
+import scala.annotation.tailrec
+import scala.util.Using
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{LongType, StringType, StructType, TimestampType}
 
 import graft.ingest.Ingest
 import graft.ops.Windows
@@ -62,12 +68,8 @@ object StarterDemo {
     }
   }
 
-  private def intervalSeconds(interval: String): Long = {
-    val iv = org.apache.spark.sql.catalyst.util.IntervalUtils.stringToInterval(
-      org.apache.spark.unsafe.types.UTF8String.fromString(interval))
-    require(iv.months == 0, s"interval must be day-time, got: $interval")
-    iv.days * 86400L + iv.microseconds / 1000000L
-  }
+  private def intervalSeconds(interval: String): Long =
+    StreamingJobs.dayTimeMicros("interval", interval) / 1000000L
 
   private def halfOf(interval: String): String =
     s"${math.max(1L, intervalSeconds(interval) / 2)} seconds"
@@ -82,21 +84,65 @@ object StarterDemo {
     case _ => Seq("key", "window_start", "window_end")
   }
 
-  /** Wire source → job → idempotent upsert sink and start the query.
-    * `jdbcUrl = None` targets the in-memory store (tests/demos);
-    * `Some(url)` the executing JDBC path (Derby/Postgres/…). */
+  /** Wire source → job → idempotent JDBC upsert sink and start the
+    * query; the sink table is created first when it is missing
+    * ([[createSinkTable]]). */
   def start(jobName: String, raw: DataFrame, interval: String,
-      checkpointDir: String, sinkTable: String,
-      jdbcUrl: Option[String] = None): StreamingQuery = {
+      checkpointDir: String, sinkTable: String, jdbcUrl: String): StreamingQuery = {
     val out = buildJob(jobName, raw, interval)
-    val sink = jdbcUrl match {
-      case Some(url) => UpsertSink.jdbcForeachBatchUpsert(url, sinkTable, upsertKey(jobName)) _
-      case None => UpsertSink.foreachBatchUpsert(sinkTable, upsertKey(jobName)) _
-    }
+    createSinkTable(jdbcUrl, sinkTable, out.schema, upsertKey(jobName))
     out.writeStream.outputMode("append")
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch(sink)
+      .foreachBatch(UpsertSink.jdbcForeachBatchUpsert(jdbcUrl, sinkTable, upsertKey(jobName)) _)
       .start()
+  }
+
+  /** Creates `table` from a job's output schema unless it exists:
+    * string → VARCHAR(256), bigint → BIGINT, timestamp → TIMESTAMP,
+    * primary key = the upsert key. Identifiers are spelled by
+    * [[UpsertSink.Idents]], so the `key` column is legal on Derby. */
+  private def createSinkTable(url: String, table: String, schema: StructType,
+      keyCols: Seq[String]): Unit =
+    Using.resource(DriverManager.getConnection(url)) { conn =>
+      val id = UpsertSink.Idents(conn)
+      val exists = Using.resource(conn.getMetaData.getTables(
+        null, conn.getSchema, id.stored(table), Array("TABLE")))(_.next())
+      if (!exists) {
+        val cols = schema.fields.map { f =>
+          val sqlType = f.dataType match {
+            case StringType => "VARCHAR(256)"
+            case LongType => "BIGINT"
+            case TimestampType => "TIMESTAMP"
+            case t => throw new IllegalArgumentException(
+              s"no sink column type for ${f.name}: ${t.simpleString}")
+          }
+          s"${id(f.name)} $sqlType" + (if (keyCols.contains(f.name)) " NOT NULL" else "")
+        }
+        val pk = keyCols.map(id(_)).mkString(", ")
+        Using.resource(conn.createStatement())(
+          _.execute(s"CREATE TABLE ${id(table)} (${cols.mkString(", ")}, PRIMARY KEY ($pk))"))
+      }
+    }
+
+  /** Where the demo writes when `--jdbc` is not given. */
+  private val DefaultJdbcUrl = "jdbc:derby:memory:graft_demo;create=true"
+
+  private val Flags = Seq("--job", "--source", "--interval", "--checkpoint", "--table", "--jdbc")
+
+  /** The CLI's `--flag value` pairs. An unknown flag or a flag without
+    * a value is an error, so a mistyped `--jdbc` cannot silently fall
+    * back to the default database. */
+  def parseArgs(args: Seq[String]): Map[String, String] = {
+    @tailrec def go(rest: List[String], opts: Map[String, String]): Map[String, String] =
+      rest match {
+        case Nil => opts
+        case flag :: _ if !Flags.contains(flag) =>
+          throw new IllegalArgumentException(
+            s"unknown flag: $flag (expected one of ${Flags.mkString(" ")})")
+        case flag :: value :: tail if !value.startsWith("--") => go(tail, opts + (flag -> value))
+        case flag :: _ => throw new IllegalArgumentException(s"flag $flag needs a value")
+      }
+    go(args.toList, Map.empty)
   }
 
   /** CLI — properties mirror the reference's config keys:
@@ -105,19 +151,27 @@ object StarterDemo {
     *   --source dir:/tmp/feed --interval "1 minute" \
     *   --checkpoint /tmp/ckpt --table demo_tumbling [--jdbc <url>]
     * }}}
-    * With `--source dir:` the demo generates a deterministic feed into
-    * the directory first ([[graft.sources.GeoJsonGen]]) when it is
-    * empty, processes everything available, prints the sink contents,
-    * and exits — a self-contained send.py + Starter run.
+    * `--jdbc` defaults to in-memory Derby ([[DefaultJdbcUrl]]). With
+    * `--source dir:` the demo generates a deterministic feed into the
+    * directory first ([[graft.sources.GeoJsonGen]]) when it is empty,
+    * processes everything available, prints the sink table, and exits
+    * — a self-contained send.py + Starter run.
     */
   def main(args: Array[String]): Unit = {
-    val opts = args.sliding(2, 2).collect { case Array(k, v) => k -> v }.toMap
+    val opts =
+      try parseArgs(args.toSeq)
+      catch {
+        case e: IllegalArgumentException =>
+          System.err.println(s"[demo] ${e.getMessage}")
+          sys.exit(2)
+      }
     val jobName = opts.getOrElse("--job", "StreamJobSqlTumbling")
     val source = opts.getOrElse("--source", "dir:/tmp/graft_demo_feed")
     val interval = opts.getOrElse("--interval", "1 minute")
     val ckpt = opts.getOrElse("--checkpoint",
       java.nio.file.Files.createTempDirectory("graft_demo_ckpt").toString)
     val table = opts.getOrElse("--table", "demo_sink")
+    val url = opts.getOrElse("--jdbc", DefaultJdbcUrl)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 
     val spark = SparkSession.builder()
@@ -148,18 +202,32 @@ object StarterDemo {
         throw new IllegalArgumentException(s"unknown --source: $source (dir:<path> | kinesis:<stream>:<region>[:<pos>])")
     }
 
-    val q = start(jobName, raw, interval, ckpt, table, opts.get("--jdbc"))
+    val q = start(jobName, raw, interval, ckpt, table, url)
     if (source.startsWith("dir:")) {
       q.processAllAvailable() // bounded demo feed: drain and exit
       q.stop()
-      val rows = UpsertSink.InMemoryStore.snapshot(table)
-      println(s"[demo] $jobName emitted ${rows.size} rows to '$table'")
-      rows.toSeq.sortBy(_._1.mkString(",")).take(20).foreach { case (k, v) =>
-        println(s"[demo]   ${k.mkString("|")} -> ${v.mkString(", ")}")
-      }
+      printSink(url, table, jobName)
       spark.stop()
     } else {
       q.awaitTermination() // live source: run until externally stopped
     }
   }
+
+  /** Prints the row count and the first 20 rows of the sink table in
+    * upsert-key order. */
+  private def printSink(url: String, table: String, jobName: String): Unit =
+    Using.resource(DriverManager.getConnection(url)) { conn =>
+      val id = UpsertSink.Idents(conn)
+      val order = upsertKey(jobName).map(id(_)).mkString(", ")
+      Using.resource(conn.createStatement()) { st =>
+        val rs = st.executeQuery(s"SELECT * FROM ${id(table)} ORDER BY $order")
+        val meta = rs.getMetaData
+        val n = meta.getColumnCount
+        val rows = Iterator.continually(rs).takeWhile(_.next())
+          .map(r => (1 to n).map(r.getObject(_)).mkString(" | ")).toVector
+        println(s"[demo] $jobName emitted ${rows.size} rows to '$table'")
+        println(s"[demo]   ${(1 to n).map(meta.getColumnName(_)).mkString(" | ")}")
+        rows.take(20).foreach(r => println(s"[demo]   $r"))
+      }
+    }
 }

@@ -3,8 +3,10 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.util.IntervalUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.ingest.Ingest
 import graft.ops.Windows
@@ -17,6 +19,15 @@ import graft.ops.Windows
   * implements it with `flatMapGroupsWithState`.
   */
 object StreamingJobs {
+
+  /** A day-time interval string ("30 minutes", "1 hour 15 seconds") in
+    * microseconds. A month has no fixed length, so month-based intervals
+    * are rejected as "`what` must be day-time". */
+  private[graft] def dayTimeMicros(what: String, interval: String): Long = {
+    val iv = IntervalUtils.stringToInterval(UTF8String.fromString(interval))
+    require(iv.months == 0, s"$what must be day-time, got: $interval")
+    iv.days * 86400000000L + iv.microseconds
+  }
 
   /** Bucket granularity shared by the date_trunc-bucketed stateful
     * operators (funnel, Top-N, window median): the truncation unit and
@@ -166,12 +177,7 @@ object StreamingJobs {
       banded: Dataset[BucketDoc], retention: String = "1 hour",
       cap: Int = graft.queries.DedupQueries.LshBucketCap): Dataset[CandPair] = {
     import banded.sparkSession.implicits._
-    val retentionMs = {
-      val iv = org.apache.spark.sql.catalyst.util.IntervalUtils.stringToInterval(
-        org.apache.spark.unsafe.types.UTF8String.fromString(retention))
-      require(iv.months == 0, s"retention must be day-time, got: $retention")
-      iv.days * 86400000L + iv.microseconds / 1000L
-    }
+    val retentionMs = dayTimeMicros("retention", retention) / 1000L
     banded
       .withWatermark("ts", retention)
       .groupByKey(b => (b.band, b.bucket))
@@ -253,12 +259,7 @@ object StreamingJobs {
       cap: Int = graft.queries.DedupQueries.SimhashAnchorCap): Dataset[CandPair] = {
     import sigs.sparkSession.implicits._
     val offs = widths.scanLeft(0)(_ + _).init
-    val retentionMs = {
-      val iv = org.apache.spark.sql.catalyst.util.IntervalUtils.stringToInterval(
-        org.apache.spark.unsafe.types.UTF8String.fromString(retention))
-      require(iv.months == 0, s"retention must be day-time, got: $retention")
-      iv.days * 86400000L + iv.microseconds / 1000L
-    }
+    val retentionMs = dayTimeMicros("retention", retention) / 1000L
     val masks = widths.map(w => (1L << w) - 1)
     sigs
       .flatMap(d => widths.indices.map(i =>
@@ -1687,15 +1688,12 @@ object StreamingJobs {
     import events.sparkSession.implicits._
     val frameUs = frameSeconds * 1000000L
     val evictMs = evictIdleAfter.map { d =>
-      val iv = org.apache.spark.sql.catalyst.util.IntervalUtils.stringToInterval(
-        org.apache.spark.unsafe.types.UTF8String.fromString(d))
-      require(iv.months == 0, s"evictIdleAfter must be day-time, got: $d")
+      val idleUs = dayTimeMicros("evictIdleAfter", d)
       // a negative retention would place the timeout before maxSeen +
       // frame: at best an IllegalArgumentException mid-stream, at worst
       // silent eviction of buffers still inside future events' frames
-      require(iv.days >= 0 && iv.microseconds >= 0,
-        s"evictIdleAfter must be non-negative, got: $d")
-      frameSeconds * 1000L + iv.days * 86400000L + iv.microseconds / 1000L
+      require(idleUs >= 0, s"evictIdleAfter must be non-negative, got: $d")
+      frameSeconds * 1000L + idleUs / 1000L
     }
     val timeoutConf =
       if (evictMs.isDefined) GroupStateTimeout.EventTimeTimeout

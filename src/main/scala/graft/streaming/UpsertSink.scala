@@ -1,13 +1,17 @@
 package graft.streaming
 
-import java.sql.{Connection, DriverManager, PreparedStatement}
+import java.sql.{Connection, DatabaseMetaData, DriverManager}
+import java.util.Locale
 
-import scala.collection.concurrent.TrieMap
+import scala.collection.mutable
+import scala.util.Using
 
 import org.apache.spark.sql.{DataFrame, Row}
 
-/** Idempotent upsert sinks — the Spark form of the reference's X1–X3
-  * sink family (SURVEY.md §2).
+/** The idempotent JDBC upsert sink — the Spark form of the reference's
+  * X1–X3 sink family (SURVEY.md §2), whose six near-identical Data-API
+  * sink classes (sink/SinkDataApiSingle/Batch/TumblingBatch/Tumbling/
+  * Sliding/Hopping) collapse into [[jdbcForeachBatchUpsert]].
   *
   * The reference's most elaborate code is a 274-line write-ahead sink
   * that buffers rows per checkpoint and publishes on
@@ -19,17 +23,17 @@ import org.apache.spark.sql.{DataFrame, Row}
   * without a WAL. The upsert key (key, window_start, window_end)
   * matches the reference's `tumbling_pkey` (reference README.MD:88).
   *
-  * Two executing backends:
-  *  - [[InMemoryStore]] — a keyed KV map for tests and local demos;
-  *  - [[jdbcForeachBatchUpsert]] — a real JDBC writer (executeBatch
-  *    from foreachPartition, one transaction per statement batch),
-  *    exercised against embedded Derby in JdbcUpsertSpec. Databases
-  *    with native upsert run the single-statement [[upsertSql]] text
-  *    (the reference's `INSERT … ON CONFLICT` form); the generic path
-  *    issues DELETE-keys + INSERT in one transaction, which has the
-  *    same converged semantics on any JDBC target.
+  * One executing backend: any JDBC database, written as DELETE-keys +
+  * INSERT in one transaction per statement batch — the same converged
+  * state as a native `INSERT … ON CONFLICT` upsert, on targets that
+  * have none (Derby, which the demo and every sink test run against).
   */
 object UpsertSink {
+
+  /** Rows per statement batch (one DELETE batch + one INSERT batch +
+    * COMMIT) — an amortization unit, not a correctness device, like the
+    * reference's sink buffer threshold (sink/SinkDataApiBatch.java:61). */
+  private val BatchRows = 500
 
   /** SQL identifiers are interpolated into statement text, so they must
     * be plain identifiers — anything else (quotes, spaces, semicolons)
@@ -40,92 +44,60 @@ object UpsertSink {
     name
   }
 
-  /** Tiny keyed KV store standing in for the external database in tests
-    * and local demos (local mode = executors share the JVM). Thread-safe:
-    * partition tasks write concurrently.
+  /** How one database spells identifiers: case-folded the way it stores
+    * unquoted names, then quoted. The quoted form names exactly the
+    * object the unquoted spelling names, and also makes reserved words
+    * such as `key` (Derby) legal column names. Read once per connection.
     */
-  object InMemoryStore {
-    private val tables = TrieMap[String, TrieMap[Seq[Any], Seq[Any]]]()
-    def upsert(table: String, key: Seq[Any], value: Seq[Any]): Unit =
-      tables.getOrElseUpdate(table, TrieMap.empty).put(key, value)
-    def snapshot(table: String): Map[Seq[Any], Seq[Any]] =
-      tables.getOrElse(table, TrieMap.empty).toMap
-    def size(table: String): Int = tables.get(table).map(_.size).getOrElse(0)
-    def clear(table: String): Unit = tables.remove(table)
-  }
+  final class Idents(meta: DatabaseMetaData) {
+    // a single space means the database does not support quoting
+    private val quote = Option(meta.getIdentifierQuoteString).map(_.trim).getOrElse("")
+    private val upper = meta.storesUpperCaseIdentifiers
+    private val lower = !upper && meta.storesLowerCaseIdentifiers
 
-  /** `foreachBatch` body: executor-side, partition-parallel, batched
-    * upsert (threshold batching mirrors the reference's sink buffers —
-    * sink/SinkDataApiBatch.java:61 — though here a batch is just an
-    * amortization unit, not a correctness device).
-    *
-    * Usage:
-    * {{{
-    * df.writeStream.outputMode("update")
-    *   .foreachBatch(UpsertSink.foreachBatchUpsert("tumbling", Seq("key", "window_start", "window_end")) _)
-    *   .option("checkpointLocation", dir).start()
-    * }}}
-    */
-  def foreachBatchUpsert(table: String, keyCols: Seq[String], batchSize: Int = 100)(
-      df: DataFrame, epochId: Long): Unit = {
-    val cols = df.columns.toSeq
-    val keyIdx = keyCols.map(cols.indexOf)
-    require(keyIdx.forall(_ >= 0), s"key columns $keyCols not all in $cols")
-    df.foreachPartition { rows: Iterator[Row] =>
-      rows.grouped(batchSize).foreach { batch =>
-        batch.foreach { r =>
-          InMemoryStore.upsert(table, keyIdx.map(r.get), r.toSeq.map(identity))
-        }
-      }
+    /** The name as the catalog stores it (for metadata lookups). */
+    def stored(name: String): String = {
+      checkIdent(name)
+      if (upper) name.toUpperCase(Locale.ROOT)
+      else if (lower) name.toLowerCase(Locale.ROOT)
+      else name
     }
+
+    /** The name as statement text. */
+    def apply(name: String): String = quote + stored(name) + quote
   }
 
-  /** SQL text for databases with native upsert — the reference's
-    * `INSERT … ON CONFLICT … DO UPDATE` built by String.format
-    * (sink/SinkDataApiSingle.java:56–60), parameterized instead of
-    * string-spliced, identifiers validated instead of trusted.
-    */
-  def upsertSql(table: String, cols: Seq[String], keyCols: Seq[String]): String = {
-    (table +: (cols ++ keyCols)).foreach(checkIdent)
-    val updates = cols.filterNot(keyCols.contains).map(c => s"$c = EXCLUDED.$c")
-    val conflictAction =
-      if (updates.isEmpty) "DO NOTHING" // all columns are key columns
-      else s"DO UPDATE SET ${updates.mkString(", ")}"
-    s"INSERT INTO $table (${cols.mkString(", ")}) VALUES (${cols.map(_ => "?").mkString(", ")}) " +
-      s"ON CONFLICT (${keyCols.mkString(", ")}) $conflictAction"
+  object Idents {
+    def apply(conn: Connection): Idents = new Idents(conn.getMetaData)
   }
 
-  /** Generic-dialect upsert as a DELETE-keys + INSERT pair. Executed in
-    * one transaction per statement batch, this converges to the same
-    * state as a native upsert on any JDBC database (Derby, for one, has
-    * no ON CONFLICT). */
-  private[streaming] def deleteSql(table: String, keyCols: Seq[String]): String = {
-    (table +: keyCols).foreach(checkIdent)
-    s"DELETE FROM $table WHERE ${keyCols.map(k => s"$k = ?").mkString(" AND ")}"
-  }
+  private[streaming] def deleteSql(id: Idents, table: String, keyCols: Seq[String]): String =
+    s"DELETE FROM ${id(table)} WHERE ${keyCols.map(k => s"${id(k)} = ?").mkString(" AND ")}"
 
-  private[streaming] def insertSql(table: String, cols: Seq[String]): String = {
-    (table +: cols).foreach(checkIdent)
-    s"INSERT INTO $table (${cols.mkString(", ")}) VALUES (${cols.map(_ => "?").mkString(", ")})"
-  }
+  private[streaming] def insertSql(id: Idents, table: String, cols: Seq[String]): String =
+    s"INSERT INTO ${id(table)} (${cols.map(id(_)).mkString(", ")}) " +
+      s"VALUES (${cols.map(_ => "?").mkString(", ")})"
 
-  /** The executing JDBC sink: `foreachBatch` body writing through
-    * standard `addBatch`/`executeBatch` from `foreachPartition` — the
-    * Spark form of the reference's batched Data-API sink
+  /** The `foreachBatch` body: writes through standard
+    * `addBatch`/`executeBatch` from `foreachPartition` — the Spark form
+    * of the reference's batched Data-API sink
     * (sink/SinkDataApiBatch.java:61–78, `BatchExecuteStatement` of
     * buffered rows per threshold).
     *
     *  - one connection per partition task, opened executor-side (the
     *    url string is the only thing serialized into the closure);
-    *  - per batch of `batchSize` rows: DELETE all keys, INSERT all
-    *    rows, then COMMIT — the delete+insert pair is atomic, so a
-    *    replayed epoch (same engine commit-log semantics as
-    *    foreachBatchUpsert) rewrites identical rows instead of
-    *    duplicating them: exactly-once to the table;
-    *  - rows within one micro-batch must have distinct keys (true for
-    *    any keyed aggregate output, which emits one row per key).
+    *  - per statement batch of up to 500 rows: DELETE all keys, INSERT
+    *    all rows, then COMMIT — the delete+insert pair is atomic, so a
+    *    replayed epoch rewrites identical rows instead of duplicating
+    *    them: exactly-once to the table;
+    *  - rows of one statement batch with equal keys collapse to the
+    *    last of them (the per-row OVER jobs emit one identical row per
+    *    equal-timestamp peer);
+    *  - a failing batch rolls back and rethrows the database's error;
+    *    earlier committed batches stay.
     *
-    * Usage (Derby in-memory for tests; any JDBC url in production):
+    * Usage (Derby in-memory for the demo and tests; any JDBC url in
+    * production):
     * {{{
     * df.writeStream.outputMode("update")
     *   .foreachBatch(UpsertSink.jdbcForeachBatchUpsert(url, "tumbling",
@@ -133,25 +105,24 @@ object UpsertSink {
     *   .option("checkpointLocation", dir).start()
     * }}}
     */
-  def jdbcForeachBatchUpsert(
-      url: String, table: String, keyCols: Seq[String], batchSize: Int = 500)(
+  def jdbcForeachBatchUpsert(url: String, table: String, keyCols: Seq[String])(
       df: DataFrame, epochId: Long): Unit = {
     val cols = df.columns.toSeq
+    (table +: (cols ++ keyCols)).foreach(checkIdent)
     val keyIdx = keyCols.map(cols.indexOf)
     require(keyIdx.forall(_ >= 0), s"key columns $keyCols not all in $cols")
-    val del = deleteSql(table, keyCols)
-    val ins = insertSql(table, cols)
     df.foreachPartition { rows: Iterator[Row] =>
-      if (rows.hasNext) {
-        val conn: Connection = DriverManager.getConnection(url)
+      if (rows.hasNext) Using.resource(DriverManager.getConnection(url)) { conn =>
+        conn.setAutoCommit(false)
         try {
-          conn.setAutoCommit(false)
-          val delSt: PreparedStatement = conn.prepareStatement(del)
-          val insSt: PreparedStatement = conn.prepareStatement(ins)
-          try {
-            rows.grouped(batchSize).foreach { batch =>
-              batch.foreach { r =>
-                keyIdx.zipWithIndex.foreach { case (ki, p) => delSt.setObject(p + 1, r.get(ki)) }
+          val id = Idents(conn)
+          Using.resources(conn.prepareStatement(deleteSql(id, table, keyCols)),
+              conn.prepareStatement(insertSql(id, table, cols))) { (delSt, insSt) =>
+            rows.grouped(BatchRows).foreach { batch =>
+              val byKey = mutable.LinkedHashMap.empty[Seq[Any], Row]
+              batch.foreach(r => byKey.update(keyIdx.map(r.get), r))
+              byKey.foreach { case (key, r) =>
+                key.indices.foreach(p => delSt.setObject(p + 1, key(p)))
                 delSt.addBatch()
                 cols.indices.foreach(i => insSt.setObject(i + 1, r.get(i)))
                 insSt.addBatch()
@@ -160,13 +131,12 @@ object UpsertSink {
               insSt.executeBatch()
               conn.commit()
             }
-          } finally {
-            delSt.close()
-            insSt.close()
           }
         } catch {
-          case t: Throwable => try conn.rollback() finally (); throw t
-        } finally conn.close()
+          case t: Throwable =>
+            try conn.rollback() catch { case r: Throwable => t.addSuppressed(r) }
+            throw t
+        }
       }
     }
   }

@@ -8,13 +8,13 @@ import org.apache.spark.sql.functions._
 import graft.ingest.Ingest
 import graft.ops.Windows
 import graft.sources.{GeoJsonGen, Sources}
-import graft.streaming.UpsertSink
+import graft.streaming.StreamingJobs
 
 /** StarterDemo end-to-end on the connector-free stand-in: the
   * generator's deterministic feed (G1, send.py parity) through the
   * reference's job dispatch (S1, Starter.java:31–42 parity) into the
-  * idempotent upsert store, converging to the batch answer over the
-  * same records.
+  * JDBC upsert sink on embedded Derby, converging to the batch answer
+  * over the same records.
   */
 class DemoSpec extends SparkSpec {
   import spark.implicits._
@@ -38,7 +38,6 @@ class DemoSpec extends SparkSpec {
   test("StarterDemo dispatch: tumbling job on the file feed converges to the batch answer") {
     val dir = Files.createTempDirectory("graft_demo_feed")
     val ckpt = Files.createTempDirectory("graft_demo_ckpt").toString
-    UpsertSink.InMemoryStore.clear("demo_tumbling")
     // 120 records × 50 ms = 6 s of event time per window isn't enough
     // to close a 1-minute window, so spread them: 1.2 s steps → 2.4 min
     GeoJsonGen.writeFiles(dir, seed = 42L, count = 120, startEpochMs = FeedStart,
@@ -46,7 +45,8 @@ class DemoSpec extends SparkSpec {
 
     val q = StarterDemo.start("StreamJobSqlTumbling",
       Sources.geojsonLinesDir(spark, dir.toString),
-      interval = "1 minute", checkpointDir = ckpt, sinkTable = "demo_tumbling")
+      interval = "1 minute", checkpointDir = ckpt, sinkTable = "demo_tumbling",
+      jdbcUrl = DerbyTables.url)
     try q.processAllAvailable() finally q.stop()
 
     val lines = GeoJsonGen.features(seed = 42L, count = 120, startEpochMs = FeedStart, stepMs = 1200L)
@@ -54,11 +54,10 @@ class DemoSpec extends SparkSpec {
         Ingest.parseGeoJson(lines.toDF("value")),
         $"received_on", $"railway_class", "1 minute")
       .as[(String, Long, Timestamp, Timestamp)].collect()
-      .map(r => (r._1, r._3.toString, r._2)).toSet
+      .map(r => (r._1, r._2, r._3)).toSet
     // append mode can only emit windows the watermark passed; every
     // emitted row must match batch exactly, and most windows must close
-    val store = UpsertSink.InMemoryStore.snapshot("demo_tumbling")
-      .map { case (k, v) => (k(0).toString, k(1).toString, v(1).asInstanceOf[Long]) }.toSet
+    val store = DerbyTables.windowCounts("demo_tumbling")
     assert(store.subsetOf(batch), s"store=$store\nbatch=$batch")
     assert(store.nonEmpty)
   }
@@ -66,13 +65,13 @@ class DemoSpec extends SparkSpec {
   test("StarterDemo dispatch: sliding OVER job emits per-row trailing counts matching batch") {
     val dir = Files.createTempDirectory("graft_demo_feed_sl")
     val ckpt = Files.createTempDirectory("graft_demo_ckpt_sl").toString
-    UpsertSink.InMemoryStore.clear("demo_sliding")
     GeoJsonGen.writeFiles(dir, seed = 5L, count = 60, startEpochMs = FeedStart,
       linesPerFile = 60, stepMs = 1000L)
 
     val q = StarterDemo.start("StreamJobSqlSliding",
       Sources.geojsonLinesDir(spark, dir.toString),
-      interval = "30 seconds", checkpointDir = ckpt, sinkTable = "demo_sliding")
+      interval = "30 seconds", checkpointDir = ckpt, sinkTable = "demo_sliding",
+      jdbcUrl = DerbyTables.url)
     try q.processAllAvailable() finally q.stop()
 
     // one file = one micro-batch = event-time-ordered processing, so
@@ -86,10 +85,10 @@ class DemoSpec extends SparkSpec {
           .orderBy(col("received_on").cast("long"))
           .rangeBetween(-30, 0)))
       .select(col("railway_class"), col("received_on"), col("trailing_cnt"))
-      .as[(String, Timestamp, Long)].collect()
-      .map(r => (r._1, r._2.toString, r._3)).toSet
-    val store = UpsertSink.InMemoryStore.snapshot("demo_sliding")
-      .map { case (k, v) => (k(0).toString, k(1).toString, v(2).asInstanceOf[Long]) }.toSet
+      .as[(String, Timestamp, Long)].collect().toSet
+    val store = DerbyTables.rows("demo_sliding", "key", "ts", "trailing_cnt")
+      .map(r => (r(0).asInstanceOf[String], r(1).asInstanceOf[Timestamp], r(2).asInstanceOf[Long]))
+      .toSet
     assert(store == batch, s"store=$store\nbatch=$batch")
     assert(store.nonEmpty)
   }
@@ -113,6 +112,72 @@ class DemoSpec extends SparkSpec {
   test("unknown job name is rejected like the reference's switch default") {
     intercept[IllegalArgumentException] {
       StarterDemo.buildJob("NoSuchJob", Seq("{}").toDF("value"), "1 minute")
+    }
+  }
+
+  test("StarterDemo.start creates the sink table from the job schema and writes the sliding job's key column") {
+    val dir = Files.createTempDirectory("graft_demo_feed_ddl")
+    GeoJsonGen.writeFiles(dir, seed = 9L, count = 20, startEpochMs = FeedStart,
+      linesPerFile = 20, stepMs = 1000L)
+    // two starts: the first creates the table, the restart finds it
+    for (_ <- 1 to 2) {
+      val ckpt = Files.createTempDirectory("graft_demo_ckpt_ddl").toString
+      val q = StarterDemo.start("StreamJobSingle", Sources.geojsonLinesDir(spark, dir.toString),
+        interval = "30 minutes", checkpointDir = ckpt, sinkTable = "demo_ddl",
+        jdbcUrl = DerbyTables.url)
+      try q.processAllAvailable() finally q.stop()
+    }
+    val conn = java.sql.DriverManager.getConnection(DerbyTables.url)
+    try {
+      val meta = conn.getMetaData
+      val rs = meta.getColumns(null, conn.getSchema, "DEMO_DDL", null)
+      val cols = Iterator.continually(rs).takeWhile(_.next())
+        .map(r => r.getString("COLUMN_NAME") -> r.getString("TYPE_NAME")).toList
+      assert(cols == List("KEY" -> "VARCHAR", "TS" -> "TIMESTAMP", "TRAILING_CNT" -> "BIGINT"))
+      val pk = meta.getPrimaryKeys(null, conn.getSchema, "DEMO_DDL")
+      val pkCols = Iterator.continually(pk).takeWhile(_.next())
+        .map(r => r.getShort("KEY_SEQ") -> r.getString("COLUMN_NAME")).toList.sorted.map(_._2)
+      assert(pkCols == List("KEY", "TS"))
+    } finally conn.close()
+    val rows = DerbyTables.rows("demo_ddl", "key", "ts", "trailing_cnt")
+    assert(rows.size == 20) // 1-s steps: every event has its own (key, ts)
+    assert(rows.map(_(2).asInstanceOf[Long]).sum >= 20L)
+  }
+
+  test("CLI flags parse into options; unknown flags and missing values are rejected") {
+    assert(StarterDemo.parseArgs(Seq("--job", "StreamJobSingle", "--jdbc", "jdbc:derby:memory:x")) ==
+      Map("--job" -> "StreamJobSingle", "--jdbc" -> "jdbc:derby:memory:x"))
+    assert(StarterDemo.parseArgs(Nil) == Map.empty)
+    for (bad <- Seq(
+        Seq("--jbdc", "jdbc:derby:memory:x"), // mistyped flag
+        Seq("--job"), // trailing flag without a value
+        Seq("--jdbc", "--table", "t"), // flag followed by another flag
+        Seq("StreamJobSingle"))) { // bare value
+      intercept[IllegalArgumentException](StarterDemo.parseArgs(bad))
+    }
+  }
+
+  test("month-based intervals are rejected at every interval entry point") {
+    val raw = Seq("{}").toDF("value")
+    val docs = spark.emptyDataset[StreamingJobs.BucketDoc]
+    val sigs = spark.emptyDataset[StreamingJobs.SimhashDoc]
+    val events = spark.emptyDataset[StreamingJobs.KeyedEvent]
+    val cases: Seq[(String, () => Any, String)] = Seq(
+      ("StarterDemo sliding interval", () => StarterDemo.buildJob("StreamJobSqlSliding", raw, "1 month"),
+        "interval must be day-time"),
+      ("StarterDemo hopping interval", () => StarterDemo.buildJob("StreamJobSqlHopping", raw, "1 month"),
+        "interval must be day-time"),
+      ("lsh retention", () => StreamingJobs.lshCandidatesStreaming(docs, retention = "1 month"),
+        "retention must be day-time"),
+      ("simhash retention", () => StreamingJobs.simhashCandidatesStreaming(sigs, retention = "1 month"),
+        "retention must be day-time"),
+      ("sliding evictIdleAfter", () => StreamingJobs.slidingCountStreaming(events, 60L, Some("1 month")),
+        "evictIdleAfter must be day-time"),
+      ("negative evictIdleAfter", () => StreamingJobs.slidingCountStreaming(events, 60L, Some("-1 hour")),
+        "evictIdleAfter must be non-negative"))
+    for ((name, call, message) <- cases) {
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains(message), s"$name: ${e.getMessage}")
     }
   }
 }

@@ -51,13 +51,13 @@ class ReferenceParitySpec extends SparkSpec {
 
   test("flagship pipeline streaming: converged upsert store == batch result") {
     implicit val sql = spark.sqlContext
-    UpsertSink.InMemoryStore.clear("rail_tumbling")
+    DerbyTables.create("rail_tumbling", DerbyTables.TumblingColumns)
     val in = MemoryStream[String]
     val pipeline = Windows.tumblingCount(
       Ingest.withEventTime(Ingest.parseGeoJson(in.toDF().toDF("value")), "received_on"),
       $"received_on", $"railway_class", "1 minute")
     val q = pipeline.writeStream.outputMode("append")
-      .foreachBatch(UpsertSink.foreachBatchUpsert("rail_tumbling",
+      .foreachBatch(UpsertSink.jdbcForeachBatchUpsert(DerbyTables.url, "rail_tumbling",
         Seq("key", "window_start", "window_end")) _)
       .start()
     try {
@@ -66,12 +66,11 @@ class ReferenceParitySpec extends SparkSpec {
       in.addData(b2); q.processAllAvailable()
       // push the watermark past every window end so all windows emit
       in.addData(geojson("11", "2020-09-14T10:00:00.000000")); q.processAllAvailable()
-      val store = UpsertSink.InMemoryStore.snapshot("rail_tumbling")
-        .map { case (k, v) => (k(0).toString, k(1).toString, v(1).asInstanceOf[Long]) }.toSet
+      val store = DerbyTables.windowCounts("rail_tumbling")
       val batch = Windows.tumblingCount(
           Ingest.parseGeoJson(wire.toDF("value")), $"received_on", $"railway_class", "1 minute")
         .as[(String, Long, Timestamp, Timestamp)].collect()
-        .map(r => (r._1, r._3.toString, r._2)).toSet
+        .map(r => (r._1, r._2, r._3)).toSet
       assert(store == batch)
     } finally q.stop()
   }

@@ -70,7 +70,7 @@ class SourcesSpec extends SparkSpec {
   test("GeoJSON file stream → tumbling counts → upsert converges to batch (S1)") {
     val dir = Files.createTempDirectory("graft_geojson_src")
     val ckpt = Files.createTempDirectory("graft_geojson_ckpt").toString
-    UpsertSink.InMemoryStore.clear("t_file_stream")
+    DerbyTables.create("t_file_stream", DerbyTables.TumblingColumns)
 
     val batch1 = Seq(
       geojson("11", "2020-09-14T09:20:10.385001"),
@@ -91,7 +91,7 @@ class SourcesSpec extends SparkSpec {
         $"received_on", $"railway_class", "1 minute")
       .writeStream.outputMode("append")
       .option("checkpointLocation", ckpt)
-      .foreachBatch(UpsertSink.foreachBatchUpsert("t_file_stream",
+      .foreachBatch(UpsertSink.jdbcForeachBatchUpsert(DerbyTables.url, "t_file_stream",
         Seq("key", "window_start", "window_end")) _)
       .start()
     try {
@@ -101,13 +101,12 @@ class SourcesSpec extends SparkSpec {
       writeFile(dir, "part-002.json", flush)
       q.processAllAvailable()
 
-      val store = UpsertSink.InMemoryStore.snapshot("t_file_stream")
-        .map { case (k, v) => (k(0).toString, k(1).toString, v(1).asInstanceOf[Long]) }.toSet
+      val store = DerbyTables.windowCounts("t_file_stream")
       val batch = Windows.tumblingCount(
           Ingest.parseGeoJson((batch1 ++ batch2).toDF("value")),
           $"received_on", $"railway_class", "1 minute")
         .as[(String, Long, Timestamp, Timestamp)].collect()
-        .map(r => (r._1, r._3.toString, r._2)).toSet
+        .map(r => (r._1, r._2, r._3)).toSet
       assert(store == batch)
       assert(store.nonEmpty)
     } finally q.stop()

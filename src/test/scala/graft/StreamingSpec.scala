@@ -8,7 +8,6 @@ import org.apache.spark.sql.functions._
 import graft.model.Tables
 import graft.ops.Windows
 import graft.streaming.StreamingJobs._
-import graft.streaming.UpsertSink
 
 /** Streaming parity (SURVEY.md §5 item 3): the same logical plans run
   * against MemoryStream feeds; converged results must equal the batch
@@ -612,55 +611,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("restart from checkpoint resumes without duplicating upserts (F1+X3)") {
-    implicit val sql = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    UpsertSink.InMemoryStore.clear("t_ckpt")
-    val in = MemoryStream[(String, Timestamp)]
-    def startQuery() = tumblingCounts(in.toDF().toDF("k", "t"), "t", "k", "1 minute")
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch(UpsertSink.foreachBatchUpsert("t_ckpt", Seq("key", "window_start", "window_end")) _)
-      .start()
-    val q1 = startQuery()
-    in.addData(("a", ts("2024-01-01 00:00:10")), ("a", ts("2024-01-01 00:00:20")))
-    q1.processAllAvailable()
-    in.addData(("a", ts("2024-01-01 00:02:00"))) // closes window 00:00
-    q1.processAllAvailable()
-    q1.stop()
-    val q2 = startQuery() // recovers offsets from the checkpoint
-    in.addData(("a", ts("2024-01-01 00:05:00"))) // closes window 00:02
-    q2.processAllAvailable()
-    q2.stop()
-    val store = UpsertSink.InMemoryStore.snapshot("t_ckpt")
-    val counts = store.map { case (k, v) => (k(1).toString, v(1)) } // (window_start, cnt)
-    assert(counts == Map(
-      "2024-01-01 00:00:00.0" -> 2L,
-      "2024-01-01 00:02:00.0" -> 1L))
-  }
-
-  test("update-mode tumbling + upsert converges despite repeated window emissions") {
-    // the reference's sink receives RUNNING updates per window and
-    // upserts them (last-write-wins); update mode mirrors that: a
-    // window may be emitted several times as events accumulate, and
-    // the store must converge to the final count
-    implicit val sql = spark.sqlContext
-    UpsertSink.InMemoryStore.clear("t_update")
-    val in = MemoryStream[(String, Timestamp)]
-    val q = tumblingCounts(in.toDF().toDF("k", "t"), "t", "k", "1 minute")
-      .writeStream.outputMode("update")
-      .foreachBatch(UpsertSink.foreachBatchUpsert("t_update", Seq("key", "window_start", "window_end")) _)
-      .start()
-    try {
-      in.addData(("a", ts("2024-01-01 00:00:10"))); q.processAllAvailable()
-      in.addData(("a", ts("2024-01-01 00:00:20"))); q.processAllAvailable() // same window again
-      in.addData(("a", ts("2024-01-01 00:00:40"))); q.processAllAvailable() // and again
-      val store = UpsertSink.InMemoryStore.snapshot("t_update")
-      assert(store.size == 1)
-      assert(store.values.head(1) == 3L, s"converged count: ${store.values.head}")
-    } finally q.stop()
-  }
-
   test("sliding OVER streaming: tied timestamps see each other (RANGE peers)") {
     implicit val sql = spark.sqlContext
     val in = MemoryStream[KeyedEvent]
@@ -893,26 +843,6 @@ class StreamingSpec extends SparkSpec {
       assert(gotMatched == batch.filter(_._2 > 0).toMap)
       assert(gotNull == batch.filter(_._2 == 0).map(_._1).toSet && gotNull.nonEmpty)
     } finally q.stop()
-  }
-
-  test("foreachBatch upsert is idempotent under replay (X3 parity)") {
-    val tumbled = Windows.tumblingCount(
-      Tables.load(spark, sf0001, "events"), $"ts", $"event_type", "1 minute")
-    UpsertSink.InMemoryStore.clear("t_replay")
-    val sink = UpsertSink.foreachBatchUpsert("t_replay", Seq("key", "window_start", "window_end")) _
-    sink(tumbled, 0L)
-    val afterFirst = UpsertSink.InMemoryStore.snapshot("t_replay")
-    sink(tumbled, 0L) // replayed epoch: same data, same epoch id
-    val afterReplay = UpsertSink.InMemoryStore.snapshot("t_replay")
-    assert(afterFirst == afterReplay)
-    assert(afterFirst.size == tumbled.count())
-  }
-
-  test("upsert SQL text for the JDBC production path") {
-    val sql = UpsertSink.upsertSql("tumbling",
-      Seq("key", "cnt", "window_start", "window_end"), Seq("key", "window_start", "window_end"))
-    assert(sql == "INSERT INTO tumbling (key, cnt, window_start, window_end) VALUES (?, ?, ?, ?) " +
-      "ON CONFLICT (key, window_start, window_end) DO UPDATE SET cnt = EXCLUDED.cnt")
   }
 
   test("streaming anomaly screen == batch trailing z-scores once flushed") {
