@@ -1663,6 +1663,13 @@ object StreamingJobs {
     * events inside the frame of the per-key max, so state size is
     * bounded by frame width × per-key event rate, not history length.
     *
+    * Cost: one key's micro-batch costs O(state + batch·log batch) — one
+    * stable sort of the batch by event time, then one pass of a
+    * two-pointer frame window over the old buffer plus the batch. The
+    * checkpointed [[SlidingState]] keeps its newest-first `List` layout
+    * (rebuilt once per batch), so checkpoints written by earlier
+    * versions of this operator resume unchanged.
+    *
     * Scale: state is per-key and partitioned by the stream's groupBy —
     * the same shuffle a keyed window agg pays. For very low key
     * cardinality the batch-mode chunked formulation
@@ -1701,8 +1708,9 @@ object StreamingJobs {
 
     def micros(t: Timestamp): Long = t.getTime * 1000L + (t.getNanos % 1000000) / 1000L
 
-    events
-      .groupByKey(_.key)
+    // grouping on the column skips groupByKey's AppendColumns
+    // deserialize pass; the shuffle hashes the same key string
+    events.toDF().groupBy(col("key")).as[String, KeyedEvent]
       .flatMapGroupsWithState(OutputMode.Append, timeoutConf) {
         (key: String, rows: Iterator[KeyedEvent], state: GroupState[SlidingState]) =>
           if (state.hasTimedOut) {
@@ -1713,40 +1721,56 @@ object StreamingJobs {
   }
 
   /** One micro-batch of the sliding OVER state machine (split out so the
-    * timed-out branch above stays a two-liner). */
+    * timed-out branch above stays a two-liner).
+    *
+    * The frame is one ascending window `win[lo, hi)` over an array sized
+    * to the old state plus the batch: an accepted event advances `lo`
+    * past times older than its frame and appends its peers at `hi`, so
+    * the trailing count is `hi - lo` and every buffered time is touched
+    * at most twice per batch. */
   private def slidingBatch(
       key: String, rows: Iterator[KeyedEvent], state: GroupState[SlidingState],
       frameUs: Long, evictMs: Option[Long],
       micros: Timestamp => Long): Iterator[SlidingCount] = {
     val st = state.getOption.getOrElse(SlidingState(Long.MinValue, Nil))
+    // stable sort (TimSort): equal-ts peers keep their input order
+    val batch = rows.map(e => (micros(e.ts), e)).toArray.sortBy(_._1)
+    val win = new Array[Long](st.timesUs.size + batch.length)
+    var hi = st.timesUs.size
+    var i = hi
+    st.timesUs.foreach { t => i -= 1; win(i) = t } // newest-first list → ascending
+    var lo = 0
     var maxSeen = st.maxSeenUs
-    var buf = st.timesUs
+    val out = Array.newBuilder[SlidingCount]
     // Ties within a batch are one group: RANGE frames include
     // peers, so equal-ts rows all see each other (Flink buffers
     // same-rowtime rows and fires them together). A tie arriving
     // in a LATER batch is late — Flink's rowtime OVER drops
     // ts <= lastTriggeringTs — so maxSeen uses <=, not <.
-    val out = rows.toSeq
-      .groupBy(e => micros(e.ts)).toSeq.sortBy(_._1)
-      .flatMap { case (t, peers) =>
-        if (t <= maxSeen) Nil // late (incl. cross-batch tie): drop
-        else {
-          maxSeen = t
-          // buf is descending and t is the new maximum: prepend
-          // the peers, prune the expired tail — no re-sort. After
-          // the prune every element is in [t - frame, t], so the
-          // trailing count is simply the buffer length.
-          buf = List.fill(peers.size)(t) ::: buf.takeWhile(_ >= t - frameUs)
-          val cnt = buf.length.toLong
-          peers.map(e => SlidingCount(key, e.ts, cnt))
-        }
+    var g = 0
+    while (g < batch.length) {
+      val t = batch(g)._1
+      var end = g + 1
+      while (end < batch.length && batch(end)._1 == t) end += 1
+      if (t > maxSeen) { // else late (incl. cross-batch tie): drop
+        maxSeen = t
+        while (lo < hi && win(lo) < t - frameUs) lo += 1
+        java.util.Arrays.fill(win, hi, hi + end - g, t)
+        hi += end - g
+        val cnt = (hi - lo).toLong
+        (g until end).foreach(p => out += SlidingCount(key, batch(p)._2.ts, cnt))
       }
+      g = end
+    }
+    // the checkpointed layout stays newest-first, so old checkpoints resume
+    var buf: List[Long] = Nil
+    (lo until hi).foreach(p => buf = win(p) :: buf)
     state.update(SlidingState(maxSeen, buf))
     // rows older than the watermark never reach the operator, so
     // maxSeen ≥ watermark and the timeout is always in the future
     evictMs.foreach { ms =>
       if (maxSeen != Long.MinValue) state.setTimeoutTimestamp(maxSeen / 1000L + ms)
     }
-    out.iterator
+    out.result().iterator
   }
 }

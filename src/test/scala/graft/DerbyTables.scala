@@ -15,12 +15,15 @@ import graft.streaming.UpsertSink
 object DerbyTables {
   val url = "jdbc:derby:memory:graft_test;create=true"
 
+  /** Columns of a tumbling-count sink table, without a primary key. */
+  val TumblingColumnsNoKey: String =
+    """"KEY" VARCHAR(64) NOT NULL, cnt BIGINT NOT NULL,
+      |window_start TIMESTAMP NOT NULL, window_end TIMESTAMP NOT NULL""".stripMargin
+
   /** Columns of a tumbling-count sink table keyed like the reference's
     * `tumbling_pkey` (reference README.MD:88). */
   val TumblingColumns: String =
-    """"KEY" VARCHAR(64) NOT NULL, cnt BIGINT NOT NULL,
-      |window_start TIMESTAMP NOT NULL, window_end TIMESTAMP NOT NULL,
-      |PRIMARY KEY ("KEY", window_start, window_end)""".stripMargin
+    TumblingColumnsNoKey + """, PRIMARY KEY ("KEY", window_start, window_end)"""
 
   /** Drops `table` if it exists and creates it with `columns` (DDL text
     * between the parentheses; quote `"KEY"`, a Derby reserved word). */

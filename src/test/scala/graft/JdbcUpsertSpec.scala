@@ -5,7 +5,7 @@ import java.sql.{SQLException, Timestamp}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-import graft.DerbyTables.{TumblingColumns, url, windowCounts}
+import graft.DerbyTables.{TumblingColumns, TumblingColumnsNoKey, url, windowCounts}
 import graft.ingest.Ingest
 import graft.model.Tables
 import graft.ops.Windows
@@ -46,15 +46,22 @@ class JdbcUpsertSpec extends SparkSpec {
   }
 
   test("JDBC upsert is idempotent under epoch replay") {
-    DerbyTables.create("t_replay", TumblingColumns)
+    // a primary key equal to the upsert key lets the sink write
+    // INSERT-first; a table without one must be written DELETE-first,
+    // or the replay would duplicate every row
     val tumbled = Windows.tumblingCount(
       Tables.load(spark, sf0001, "events"), $"ts", $"event_type", "1 minute")
-    val sink = UpsertSink.jdbcForeachBatchUpsert(url, "t_replay", tumblingKey) _
-    sink(tumbled, 0L)
-    val afterFirst = windowCounts("t_replay")
-    sink(tumbled, 0L) // replayed epoch: same data, same epoch id
-    assert(windowCounts("t_replay") == afterFirst)
-    assert(afterFirst.size == tumbled.count())
+    Seq("t_replay" -> TumblingColumns, "t_replay_nokey" -> TumblingColumnsNoKey).foreach {
+      case (table, columns) =>
+        DerbyTables.create(table, columns)
+        val sink = UpsertSink.jdbcForeachBatchUpsert(url, table, tumblingKey) _
+        sink(tumbled, 0L)
+        val afterFirst = windowCounts(table)
+        sink(tumbled, 0L) // replayed epoch: same data, same epoch id
+        assert(windowCounts(table) == afterFirst, table)
+        val keys = DerbyTables.rows(table, "key", "window_start", "window_end")
+        assert((table, keys.size, keys.distinct.size) == ((table, tumbled.count(), tumbled.count())))
+    }
   }
 
   test("restart from checkpoint resumes into Derby without duplicate rows (F1+X3)") {

@@ -457,22 +457,33 @@ class StreamingSpec extends SparkSpec {
 
   test("flatMapGroupsWithState sliding OVER matches batch OVER on in-order feed") {
     implicit val sql = spark.sqlContext
-    val events = Tables.load(spark, sf0001, "events")
-      .select($"event_type".as("key"), $"ts")
-      .orderBy("ts").limit(200)
-      .as[KeyedEvent].collect()
+    // 6 micro-batches of 40 s event time each against a 60-s frame: every
+    // key holds 110-150 events inside its frame, so each batch evicts
+    // times buffered by the batch before. Rows are shuffled within a
+    // batch (the operator sorts them); every 10th time of key c is a
+    // tied pair (RANGE peers).
+    val base = ts("2024-01-01 00:00:00").getTime
+    val rnd = new scala.util.Random(7)
+    val batches = (0 until 6).map { b =>
+      val from = base + b * 40000L
+      rnd.shuffle(Seq("a" -> 400L, "b" -> 500L, "c" -> 600L).flatMap { case (k, stepMs) =>
+        (from until from + 40000L by stepMs).flatMap { t =>
+          val e = KeyedEvent(k, new Timestamp(t))
+          if (k == "c" && (t - base) % 6000L == 0) Seq(e, e) else Seq(e)
+        }
+      })
+    }
     val in = MemoryStream[KeyedEvent]
     val q = slidingCountStreaming(in.toDS(), 60L)
       .writeStream.outputMode("append").format("memory").queryName("sliding_out").start()
     try {
-      val (b1, b2) = events.splitAt(100)
-      in.addData(b1.toSeq); q.processAllAvailable()
-      in.addData(b2.toSeq); q.processAllAvailable()
-      val got = spark.table("sliding_out")
-        .select($"key", $"ts", $"trailing_cnt").as[(String, Timestamp, Long)].collect().toSet
-      val want = Windows.slidingOverCount(
-          events.toSeq.toDF("key", "ts"), $"ts", $"key", 60L)
-        .select($"key", $"ts", $"trailing_cnt").as[(String, Timestamp, Long)].collect().toSet
+      batches.foreach { b => in.addData(b); q.processAllAvailable() }
+      def sorted(df: org.apache.spark.sql.DataFrame) =
+        df.select($"key", $"ts", $"trailing_cnt").as[(String, Timestamp, Long)].collect().toSeq
+          .sortBy(r => (r._1, r._2.getTime))
+      val got = sorted(spark.table("sliding_out"))
+      val want = sorted(Windows.slidingOverCount(batches.flatten.toDF(), $"ts", $"key", 60L))
+      assert(got.size == batches.map(_.size).sum)
       assert(got == want)
     } finally q.stop()
   }
@@ -627,6 +638,30 @@ class StreamingSpec extends SparkSpec {
       // batch RANGE semantics: both tied rows count each other (2), the
       // later row counts all three
       assert(got.map(_._2) == Seq(2L, 2L, 3L))
+    } finally q.stop()
+  }
+
+  test("sliding OVER streaming: frame bound inclusive, cross-batch ties and late rows dropped") {
+    implicit val sql = spark.sqlContext
+    val in = MemoryStream[KeyedEvent]
+    val q = slidingCountStreaming(in.toDS(), 60L)
+      .writeStream.outputMode("append").format("memory").queryName("sliding_late").start()
+    try {
+      in.addData(
+        KeyedEvent("a", ts("2024-01-01 00:00:10")),
+        KeyedEvent("a", ts("2024-01-01 00:01:10"))) // exactly one frame later: still inside
+      q.processAllAvailable()
+      in.addData(
+        KeyedEvent("a", ts("2024-01-01 00:01:10")), // tie with an earlier batch: late
+        KeyedEvent("a", ts("2024-01-01 00:00:30")), // older than the newest seen: late
+        KeyedEvent("a", ts("2024-01-01 00:02:10"))) // frame [00:01:10, 00:02:10]
+      q.processAllAvailable()
+      val got = spark.table("sliding_late")
+        .select($"ts", $"trailing_cnt").as[(Timestamp, Long)].collect().sortBy(_._1.getTime).toSeq
+      assert(got == Seq(
+        ts("2024-01-01 00:00:10") -> 1L,
+        ts("2024-01-01 00:01:10") -> 2L,
+        ts("2024-01-01 00:02:10") -> 2L))
     } finally q.stop()
   }
 
