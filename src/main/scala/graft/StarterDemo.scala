@@ -186,7 +186,7 @@ object StarterDemo {
       case Array("dir", path) =>
         val dir = java.nio.file.Paths.get(path)
         if (!java.nio.file.Files.isDirectory(dir) ||
-            !java.nio.file.Files.list(dir).findFirst().isPresent)
+            !Using.resource(java.nio.file.Files.list(dir))(_.findFirst().isPresent))
           // 1.2 s event-time steps: 500 records span 10 minutes, so a
           // 1-minute append-mode window demo closes ~9 windows (50 ms
           // steps — send.py's cadence — would close none)

@@ -2,6 +2,9 @@ package graft.ingest
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+
+import graft.ingest.IngestKernels.GeoJsonFields
 import graft.model.Schemas
 
 /** Ingest stage: JSON deserialization, projection, timestamp parse,
@@ -34,17 +37,24 @@ object Ingest {
 
   /** S2 + P1 — GeoJSON envelope → (railway_class, received_on).
     *
-    * `from_json` with the pruned schema parses only the two consumed
-    * fields; Catalyst additionally prunes the parse via its
-    * OptimizeJsonExprs/pruning rules. Mirrors the reference's first
-    * `.map` (StreamJobSqlTumbling.java:106–119) which hand-drops 5 of 7
-    * fields before the shuffle.
+    * The envelope is `coalesce(kernel, from_json)` over the pruned
+    * schema: the [[IngestKernels.GeoJsonFields]] kernel validates the
+    * line as strict JSON in one pass over its bytes and reads the two
+    * consumed fields; on any line it is not certain about (escapes,
+    * non-ASCII strings, duplicate target keys, non-string targets,
+    * malformed JSON, ...) it returns null and `from_json` decides the
+    * record as before. Mirrors the reference's first `.map`
+    * (StreamJobSqlTumbling.java:106–119) which hand-drops 5 of 7 fields
+    * before the shuffle.
     */
   def parseGeoJson(
       df: DataFrame,
       jsonCol: String = "value",
       fallback: Column = current_timestamp()): DataFrame = {
-    val parsed = from_json(col(jsonCol), Schemas.geojsonPruned)
+    val line = col(jsonCol)
+    val parsed = coalesce(
+      Bridge.column(GeoJsonFields(Bridge.expression(line))),
+      from_json(line, Schemas.geojsonPruned))
     df.select(
       parsed.getField("properties").getField("N02_001").as("railway_class"),
       parseTimestamp(
