@@ -18,7 +18,8 @@ import graft.streaming.{StreamingJobs, UpsertSink}
 /** Demo entry point with the reference's job-dispatch contract
   * (reference Starter.java:31–42: a `JOB_CLASS_NAME` property selects
   * one of the stream jobs; `INTERVAL_AMOUNT`/`INTERVAL_UOM` size the
-  * window — StreamJobSqlTumbling.java:86–88).
+  * window — StreamJobSqlTumbling.java:86–88). The jobs, 1:1 with the
+  * reference classes, are the rows of its dispatch table `Jobs`.
   *
   * The one-line swap to the real front door: pass
   * `--source kinesis:<streamName>:<region>[:<initpos>]` and put the
@@ -28,61 +29,76 @@ import graft.streaming.{StreamingJobs, UpsertSink}
   * (and DemoSpec) runs the file stand-in `--source dir:<path>`, whose
   * records reach the job as the same raw strings a Kinesis record
   * would ([[Sources.geojsonLinesDir]]).
-  *
-  * Jobs (1:1 with the reference classes):
-  *  - `StreamJobSqlTumbling` / `StreamJobTumbling` — tumbling count
-  *    (the Table-API job maps onto the same plan, W4);
-  *  - `StreamJobSqlHopping` — hopping count (the reference hard-codes
-  *    slide 0, degenerate in Flink and rejected by Spark; the demo
-  *    uses slide = size/2 as the intended semantics, SURVEY.md §7.3);
-  *  - `StreamJobTumblingOffset` — tumbling with alignment offset;
-  *  - `StreamJobSqlSliding` / `StreamJobSingle` — per-row trailing
-  *    COUNT(*) OVER RANGE (30-minute frame in StreamJobSingle.java:152),
-  *    via the stateful streaming OVER operator.
   */
 object StarterDemo {
 
-  /** Dispatch table — the Spark form of Starter.java's switch. Builds
-    * the transformed stream from raw string records; pure, so tests
-    * drive it with any source. */
-  def buildJob(jobName: String, raw: DataFrame, interval: String,
-      offset: String = "15 seconds"): DataFrame = {
-    val parsed = Ingest.withEventTime(Ingest.parseGeoJson(raw), "received_on")
-    jobName match {
-      case "StreamJobSqlTumbling" | "StreamJobTumbling" =>
-        Windows.tumblingCount(parsed, col("received_on"), col("railway_class"), interval)
-      case "StreamJobSqlHopping" =>
-        Windows.hoppingCount(parsed, col("received_on"), col("railway_class"),
-          interval, halfOf(interval))
-      case "StreamJobTumblingOffset" =>
-        Windows.tumblingOffsetCount(parsed, col("received_on"), col("railway_class"),
-          interval, offset)
-      case "StreamJobSqlSliding" | "StreamJobSingle" =>
-        import parsed.sparkSession.implicits._
-        StreamingJobs.slidingCountStreaming(
-          parsed.select(col("railway_class").as("key"), col("received_on").as("ts"))
-            .as[StreamingJobs.KeyedEvent],
-          frameSeconds = intervalSeconds(interval)).toDF()
-      case other =>
-        throw new IllegalArgumentException(s"unknown JOB_CLASS_NAME: $other")
-    }
+  /** One reference job: its plan over the parsed, watermarked events
+    * for an interval string, and the key its sink upserts on. */
+  private final case class Job(plan: (DataFrame, String) => DataFrame, upsertKey: Seq[String])
+
+  private val EventTime = col("received_on")
+  private val RailwayClass = col("railway_class")
+
+  /** Window aggregates upsert on (key, window bounds) — the reference
+    * sink's idempotent key (sink/SinkDataApiTumbling.java ON CONFLICT
+    * columns). */
+  private val WindowKey = Seq("key", "window_start", "window_end")
+
+  /** The dispatch table — the Spark form of Starter.java's switch. */
+  private val Jobs: Map[String, Job] = {
+    val tumbling = Job(Windows.tumblingCount(_, EventTime, RailwayClass, _), WindowKey)
+    // per-row trailing COUNT(*) OVER RANGE (30-minute frame in
+    // StreamJobSingle.java:152); the latest count per event time
+    // replays idempotently
+    val sliding = Job(slidingCount, Seq("key", "ts"))
+    Map(
+      // the Table-API job maps onto the same plan (W4)
+      "StreamJobSqlTumbling" -> tumbling,
+      "StreamJobTumbling" -> tumbling,
+      // the reference hard-codes slide 0, degenerate in Flink and
+      // rejected by Spark; slide = size/2 is the intended semantics
+      // (SURVEY.md §7.3)
+      "StreamJobSqlHopping" -> Job((events, interval) =>
+        Windows.hoppingCount(events, EventTime, RailwayClass, interval,
+          s"${StreamingJobs.dayTimeMicros("interval", interval) / 2} microseconds"),
+        WindowKey),
+      // TumblingEventTimeWindows.of(size, offset) with a 15-second
+      // alignment offset (StreamJobTumblingOffset.java:157)
+      "StreamJobTumblingOffset" -> Job((events, interval) =>
+        Windows.tumblingCount(events, EventTime, RailwayClass, interval, offset = "15 seconds"),
+        WindowKey),
+      "StreamJobSqlSliding" -> sliding,
+      "StreamJobSingle" -> sliding)
   }
 
-  private def intervalSeconds(interval: String): Long =
-    StreamingJobs.dayTimeMicros("interval", interval) / 1000000L
+  private def job(jobName: String): Job = Jobs.getOrElse(jobName,
+    throw new IllegalArgumentException(s"unknown JOB_CLASS_NAME: $jobName"))
 
-  private def halfOf(interval: String): String =
-    s"${math.max(1L, intervalSeconds(interval) / 2)} seconds"
+  /** Builds the job's output stream from raw string records; pure, so
+    * tests drive it with any source. Every job's output carries the
+    * `graft_sink` observation, the Spark-native form of the reference's
+    * per-row result logging (P6 — `log.warn("resultSet output: …")`,
+    * StreamJobSqlTumbling.java:168): the emitted row count surfaces per
+    * micro-batch in the query progress instead of as log lines in the
+    * hot path. */
+  def buildJob(jobName: String, raw: DataFrame, interval: String): DataFrame =
+    job(jobName).plan(Ingest.withEventTime(Ingest.parseGeoJson(raw), "received_on"), interval)
+      .observe("graft_sink", count(lit(1)).as("rows_emitted"))
 
-  /** The upsert key per job shape: window aggregates key on
-    * (key, window bounds) — the reference sink's idempotent key
-    * (sink/SinkDataApiTumbling.java ON CONFLICT columns); the per-row
-    * sliding jobs key on (key, ts) — latest trailing count per event
-    * time, which replays idempotently. */
-  def upsertKey(jobName: String): Seq[String] = jobName match {
-    case "StreamJobSqlSliding" | "StreamJobSingle" => Seq("key", "ts")
-    case _ => Seq("key", "window_start", "window_end")
+  /** The sliding frame runs on whole seconds, so an interval the frame
+    * cannot hold exactly is rejected rather than truncated. */
+  private def slidingCount(events: DataFrame, interval: String): DataFrame = {
+    val us = StreamingJobs.dayTimeMicros("interval", interval)
+    require(us >= 0, s"interval must be non-negative, got: $interval")
+    require(us % 1000000L == 0, s"interval must be a whole number of seconds, got: $interval")
+    import events.sparkSession.implicits._
+    StreamingJobs.slidingCountStreaming(
+      events.select(RailwayClass.as("key"), EventTime.as("ts")).as[StreamingJobs.KeyedEvent],
+      frameSeconds = us / 1000000L).toDF()
   }
+
+  /** The key the job's sink upserts on. */
+  def upsertKey(jobName: String): Seq[String] = job(jobName).upsertKey
 
   /** Wire source → job → idempotent JDBC upsert sink and start the
     * query; the sink table is created first when it is missing

@@ -13,20 +13,6 @@ import org.apache.spark.sql.types._
   */
 object Schemas {
 
-  /** Full GeoJSON envelope schema (FIXTURES.md §1). */
-  val geojson: StructType = StructType(Seq(
-    StructField("type", StringType),
-    StructField("properties", StructType(Seq(
-      StructField("RECEIVED_ON", StringType),
-      StructField("N02_001", StringType),
-      StructField("N02_002", StringType),
-      StructField("N02_003", StringType),
-      StructField("N02_004", StringType),
-      StructField("ID", StringType),
-      StructField("COUNT", IntegerType)
-    )))
-  ))
-
   /** Pruned parse schema: declaring only the consumed fields lets
     * `from_json` skip the rest at parse time — the Spark-native form of
     * the reference's manual early projection
@@ -44,11 +30,6 @@ object Schemas {
     */
   val isoMicros = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
 }
-
-/** Working record after ingest — the reference's
-  * `Tuple2<String, Timestamp>` (StreamJobSqlTumbling.java:106–119).
-  */
-case class RailEvent(railwayClass: String, receivedOn: java.sql.Timestamp)
 
 /** Harness `events` table row (TESTDATA.md / FIXTURES.md §2). */
 case class Event(
@@ -178,9 +159,6 @@ object Tables {
     * [[load]]: for them an extra full pass over the corpus at 100 TB
     * costs more than serial scanning at bench scale ever could. */
   def loadSpread(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // measurement-only escape hatch for spread-site A/B runs
-    if (sys.env.contains("SPARK_GRAFT_NO_SPREAD"))
-      return load(spark, dir, name)
     val df = load(spark, dir, name)
     if (scanPartitions(spark, dir, name) >= spark.sparkContext.defaultParallelism) df
     else df.repartition(spark.sparkContext.defaultParallelism)

@@ -23,16 +23,23 @@ import org.apache.spark.sql.functions._
   */
 object Windows {
 
-  /** W1/W4 + A1 + A3 — tumbling event-time count.
+  /** W1/W4/W5 + A1 + A3 — tumbling event-time count.
     *
     * The flagship query (reference StreamJobSqlTumbling.java:145–153):
     * `SELECT CAST(key), COUNT(*), TUMBLE_START, TUMBLE_END FROM Inputs
     * GROUP BY TUMBLE(rowtime, size), key`. Window start/end come free as
     * fields of the `window()` group key (the reference needs a dedicated
     * `ProcessWindowFunction` for this — StreamJobTumblingOffset.java:203–219).
+    *
+    * `offset` shifts the window alignment: Flink's
+    * `TumblingEventTimeWindows.of(size, offset)` (reference
+    * StreamJobTumblingOffset.java:157) maps 1:1 onto
+    * `window(ts, size, size, startTime = offset)`, and Spark's
+    * `window(ts, size)` is that call with offset 0.
     */
-  def tumblingCount(df: DataFrame, ts: Column, key: Column, size: String): DataFrame =
-    df.groupBy(window(ts, size), key.cast("string").as("key"))
+  def tumblingCount(df: DataFrame, ts: Column, key: Column, size: String,
+      offset: String = "0 seconds"): DataFrame =
+    df.groupBy(window(ts, size, size, offset), key.cast("string").as("key"))
       .agg(count(lit(1)).as("cnt"))
       .select(
         col("key"), col("cnt"),
@@ -61,20 +68,6 @@ object Windows {
         col("window.end").as("window_end"),
         (col("window.end") - expr("INTERVAL 1 MILLISECOND")).as("window_rowtime"))
   }
-
-  /** W5 — tumbling window with alignment offset.
-    *
-    * Flink's `TumblingEventTimeWindows.of(size, offset)`
-    * (reference StreamJobTumblingOffset.java:157) maps 1:1 onto
-    * `window(ts, size, size, startTime = offset)`.
-    */
-  def tumblingOffsetCount(df: DataFrame, ts: Column, key: Column, size: String, offset: String): DataFrame =
-    df.groupBy(window(ts, size, size, offset), key.cast("string").as("key"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(
-        col("key"), col("cnt"),
-        col("window.start").as("window_start"),
-        col("window.end").as("window_end"))
 
   /** W6 — cumulative (expanding) windows: per `maxSize` bucket, counts
     * over [start, start+step), [start, start+2·step), …,
@@ -275,7 +268,11 @@ object Windows {
     * the reference's surface (SURVEY.md §2 coverage notes list session
     * windows as absent) — included to complete the window family.
     * Spark's `session_window` merges partial sessions in the same
-    * shuffle as the count aggregate.
+    * shuffle as the count aggregate. The same plan streams as is: on a
+    * watermarked stream ([[graft.ingest.Ingest.withEventTime]]) partial
+    * sessions merge inside the stateful aggregation that holds the
+    * counts, a session finalizes (append mode) once the watermark
+    * passes its end, and state per key is only the open sessions.
     */
   def sessionCount(df: DataFrame, ts: Column, key: Column, gap: String): DataFrame =
     df.groupBy(session_window(ts, gap), key.cast("string").as("key"))
@@ -289,10 +286,10 @@ object Windows {
     * the session's events concatenated in (ts, event_id) order (a
     * TOTAL order: event_id is unique, so the path is deterministic
     * under any partitioning). Pure plan function shared by the batch
-    * top-paths query (`q_session_paths`) and the streaming form
-    * ([[graft.streaming.StreamingJobs.sessionPathsStreaming]]): on a
-    * watermarked stream the same session_window aggregate emits each
-    * session's final path once the watermark passes its end. */
+    * top-paths query (`q_session_paths`) and its streaming form: on a
+    * watermarked stream ([[graft.ingest.Ingest.withEventTime]]) the same
+    * session_window aggregate emits each session's final path once the
+    * watermark passes its end, and state holds only the open sessions. */
   def sessionPaths(df: DataFrame, ts: Column, key: Column, gap: String): DataFrame =
     df.groupBy(session_window(ts, gap), key.as("key"))
       .agg(sort_array(collect_list(

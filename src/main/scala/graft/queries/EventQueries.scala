@@ -145,7 +145,7 @@ object EventQueries {
 
     // W5 — tumbling with alignment offset (StreamJobTumblingOffset.java:157)
     "q_tumbling_offset" -> ((s, dir) =>
-      Windows.tumblingOffsetCount(events(s, dir), col("ts"), col("event_type"), "60 seconds", "15 seconds")),
+      Windows.tumblingCount(events(s, dir), col("ts"), col("event_type"), "60 seconds", "15 seconds")),
 
     // W6 — cumulative (expanding) windows, 1-minute step inside a
     // 4-minute bucket (Flink CUMULATE TVF; slice-optimized — see

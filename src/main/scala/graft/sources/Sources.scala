@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
 
 /** Source wiring — operator S1 of SURVEY.md §2.
   *
@@ -9,77 +8,52 @@ import org.apache.spark.sql.types.StructType
   * (`FlinkKinesisConsumer`, reference StreamJobSqlTumbling.java:41–53,
   * config keys README.MD:113–116). In Spark that is a `readStream`
   * format; everything downstream is source-agnostic, so each helper
-  * here returns a raw DataFrame the ingest stage
-  * ([[graft.ingest.Ingest.parseGeoJson]]) then shapes.
+  * here returns a raw DataFrame of opaque string records that the
+  * ingest stage ([[graft.ingest.Ingest.parseGeoJson]]) then shapes.
   *
   * This container has no Kinesis connector jar and zero egress, so
-  * [[kinesis]] builds the reader without starting it; the harness runs
-  * batch/file/rate/memory forms (TESTDATA.md). At 100 TB the batch
-  * entry point is the parquet scan — partition-pruned and
-  * filter-pushed by Catalyst.
+  * [[kinesis]] builds the reader without starting it, and the
+  * streaming jobs run on [[geojsonLinesDir]], the connector-free
+  * stand-in. Batch queries read their parquet tables through
+  * [[graft.model.Tables]].
   */
 object Sources {
 
-  /** Streaming Kinesis source (spark-sql-kinesis connector wiring; per
-    * BASELINE.json `spark_approach`). `streamName`/`region`/
-    * `initialPosition` mirror the reference's consumer config keys
-    * (reference README.MD:113–116: `inputStreamName`, `region`,
-    * `flink.stream.initpos`).
-    *
-    * Target artifact: **awslabs/spark-sql-kinesis-connector**
+  /** The one Kinesis connector this build targets:
+    * **awslabs/spark-sql-kinesis-connector**
     * (`com.amazonaws:spark-streaming-sql-kinesis-connector_2.13`), the
-    * actively maintained DSv2 connector for Spark 3.2+ — the connector
-    * jar is not present in this container (zero egress), so this
-    * builder is exercised up to `load()` wiring only. Key mapping from
-    * this helper's parameters to the connector's option schema:
-    *
-    * | parameter         | awslabs `aws-kinesis` option   | qubole `kinesis` option |
-    * |-------------------|--------------------------------|-------------------------|
-    * | `streamName`      | `kinesis.streamName`           | `streamName`            |
-    * | `region`          | `kinesis.region`               | `endpointUrl` (derived) |
-    * | `initialPosition` | `kinesis.startingPosition`     | `startingPosition`      |
-    *
-    * `connector = "aws-kinesis"` (default) emits the awslabs keys;
-    * `connector = "kinesis"` emits the legacy qubole-fork flat keys
-    * (`com.qubole.spark:spark-sql-kinesis_2.12`, Spark 2.x/3.0 era).
-    * Position values accepted by both: `LATEST`, `TRIM_HORIZON`
-    * (the reference's `flink.stream.initpos` values map 1:1).
-    */
-  /** The exact option-key contract each connector documents, as pure
-    * data — [[kinesis]] is `format(connector).options(this).load()`,
-    * and SourcesSpec pins these keys so the one-line production swap
+    * actively maintained DSv2 connector for Spark 3.2+. */
+  private val KinesisFormat = "aws-kinesis"
+
+  /** The option keys the awslabs connector documents, as pure data —
+    * [[kinesis]] is `format("aws-kinesis").options(this).load()`, and
+    * SourcesSpec pins these keys so the one-line production swap
     * cannot rot silently while the connector jar is absent here. */
   private[graft] def kinesisOptions(
       streamName: String,
       region: String,
-      initialPosition: String,
-      connector: String): Map[String, String] = connector match {
-    case "aws-kinesis" => // awslabs DSv2 connector: namespaced keys
-      Map(
-        "kinesis.streamName" -> streamName,
-        "kinesis.region" -> region,
-        "kinesis.startingPosition" -> initialPosition)
-    case _ => // qubole-fork flat keys; region rides the endpoint URL
-      Map(
-        "streamName" -> streamName,
-        "endpointUrl" -> s"https://kinesis.$region.amazonaws.com",
-        "startingPosition" -> initialPosition)
-  }
+      initialPosition: String): Map[String, String] =
+    Map(
+      "kinesis.streamName" -> streamName,
+      "kinesis.region" -> region,
+      "kinesis.startingPosition" -> initialPosition)
 
+  /** Streaming Kinesis source (per BASELINE.json `spark_approach`).
+    * `streamName`/`region`/`initialPosition` mirror the reference's
+    * consumer config keys (reference README.MD:113–116:
+    * `inputStreamName`, `region`, `flink.stream.initpos`); position
+    * values `LATEST` and `TRIM_HORIZON` map 1:1. The connector jar is
+    * not present in this container (zero egress), so this builder is
+    * exercised up to `load()` wiring only.
+    */
   def kinesis(
       spark: SparkSession,
       streamName: String,
       region: String,
-      initialPosition: String = "LATEST",
-      connector: String = "aws-kinesis"): DataFrame =
-    spark.readStream.format(connector)
-      .options(kinesisOptions(streamName, region, initialPosition, connector))
+      initialPosition: String = "LATEST"): DataFrame =
+    spark.readStream.format(KinesisFormat)
+      .options(kinesisOptions(streamName, region, initialPosition))
       .load()
-
-  /** Streaming file source over a directory of JSON lines — the
-    * connector-free stand-in with identical downstream semantics. */
-  def jsonDir(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.readStream.schema(schema).json(path)
 
   /** Streaming text source over a directory of GeoJSON-lines files —
     * the closest connector-free stand-in for [[kinesis]]: like a
@@ -94,13 +68,4 @@ object Sources {
     */
   def geojsonLinesDir(spark: SparkSession, path: String): DataFrame =
     spark.readStream.text(path)
-
-  /** Synthetic rate source (smoke tests / backpressure experiments). */
-  def rate(spark: SparkSession, rowsPerSecond: Int): DataFrame =
-    spark.readStream.format("rate")
-      .option("rowsPerSecond", rowsPerSecond.toString).load()
-
-  /** Batch parquet table (the harness path — TESTDATA.md). */
-  def parquetTable(spark: SparkSession, dir: String, name: String): DataFrame =
-    graft.model.Tables.load(spark, dir, name)
 }

@@ -11,12 +11,15 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.ingest.Ingest
 import graft.ops.Windows
 
-/** Structured-Streaming forms of the reference's jobs. The group-window
-  * jobs reuse the *same* pure plan functions as batch ([[Windows]]) —
-  * one logical-plan layer, two run modes (SURVEY.md §7.1). Only the
-  * per-row OVER aggregation needs dedicated streaming code, because
-  * Structured Streaming has no OVER: [[slidingCountStreaming]]
-  * implements it with `flatMapGroupsWithState`.
+/** Structured-Streaming operators that have no batch plan to reuse.
+  * The group-window jobs (tumbling, hopping, session) need none: the
+  * *same* pure plan functions as batch ([[Windows]]) run on a stream
+  * watermarked by [[Ingest.withEventTime]] — one logical-plan layer,
+  * two run modes (SURVEY.md §7.1) — and [[graft.StarterDemo]] composes
+  * the reference's jobs from them. The per-row OVER aggregation needs
+  * dedicated streaming code, because Structured Streaming has no OVER:
+  * [[slidingCountStreaming]] implements it with
+  * `flatMapGroupsWithState`.
   */
 object StreamingJobs {
 
@@ -44,23 +47,6 @@ object StreamingJobs {
   private def bucketOf(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     date_trunc(BucketUnit, c)
 
-  /** Flagship streaming job (reference StreamJobSqlTumbling): watermark
-    * + tumbling count, append-safe once the watermark passes window end.
-    *
-    * The `observe` metric is the Spark-native form of the reference's
-    * per-row result logging (P6 — `log.warn("resultSet output: …")`,
-    * reference StreamJobSqlTumbling.java:168): emitted row counts and
-    * count sums surface per micro-batch via QueryProgress /
-    * QueryExecutionListener instead of log lines in the hot path.
-    */
-  def tumblingCounts(events: DataFrame, tsCol: String, keyCol: String, size: String): DataFrame =
-    Windows.tumblingCount(Ingest.withEventTime(events, tsCol), col(tsCol), col(keyCol), size)
-      .observe("graft_sink", count(lit(1)).as("rows_emitted"), sum(col("cnt")).as("events_covered"))
-
-  /** Hopping variant (reference StreamJobSqlHopping). */
-  def hoppingCounts(events: DataFrame, tsCol: String, keyCol: String, size: String, slide: String): DataFrame =
-    Windows.hoppingCount(Ingest.withEventTime(events, tsCol), col(tsCol), col(keyCol), size, slide)
-
   /** Streaming CUMULATE windows. The batch slice-optimized form
     * ([[graft.ops.Windows.cumulateCount]]) ends in a second aggregation
     * over derived (start, end) columns — not a time-window group, so
@@ -86,31 +72,6 @@ object StreamingJobs {
           timestamp_millis(unix_millis(col("window.start")) + lit(lim)).as("window_end"))
     }.reduce(_ unionByName _)
   }
-
-  /** Session-window variant. Spark's `session_window` is natively
-    * streamable: partial sessions merge inside the same stateful
-    * aggregation operator that holds the counts, so this reuses the
-    * SAME pure plan function as batch ([[graft.ops.Windows.sessionCount]])
-    * — no dedicated streaming code. A session finalizes (append mode)
-    * once the watermark passes its end (max ts + gap); state per key is
-    * only the OPEN sessions, evicted on emission.
-    */
-  def sessionCounts(events: DataFrame, tsCol: String, keyCol: String, gap: String): DataFrame =
-    Windows.sessionCount(Ingest.withEventTime(events, tsCol), col(tsCol), col(keyCol), gap)
-
-  /** Streaming per-session event-type paths — the same pure plan as
-    * the batch path frame ([[graft.ops.Windows.sessionPaths]]) under a
-    * watermark: the session_window aggregate buffers each OPEN
-    * session's (ts, event_id, type) rows as state and emits the
-    * finalized ordered path once the watermark passes session end
-    * (append mode). State per key = open sessions only — eviction on
-    * emission bounds it exactly like the session-count job; the
-    * downstream top-paths count is an ordinary keyed aggregation over
-    * this append stream. Requires `event_id` / `event_type` columns
-    * (the events schema). */
-  def sessionPathsStreaming(events: DataFrame, tsCol: String, keyCol: String,
-      gap: String): DataFrame =
-    Windows.sessionPaths(Ingest.withEventTime(events, tsCol), col(tsCol), col(keyCol), gap)
 
   /** Streaming exact dedup for a document feed: keep the first
     * occurrence of each content digest, drop later copies. State is

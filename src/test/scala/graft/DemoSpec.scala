@@ -109,9 +109,22 @@ class DemoSpec extends SparkSpec {
     assert(off.forall(r => r._3.getTime % 60000L == 15000L))
   }
 
+  test("a one-second hopping job puts each event in two overlapping half-second-slide windows") {
+    val lines = GeoJsonGen.features(seed = 3L, count = 40, startEpochMs = FeedStart, stepMs = 700L)
+    val hop = StarterDemo.buildJob("StreamJobSqlHopping", lines.toDF("value"), "1 second")
+      .as[(String, Long, Timestamp, Timestamp, Timestamp)].collect()
+    assert(hop.map(_._2).sum == 80)
+    assert(hop.forall(r => r._4.getTime - r._3.getTime == 1000L && r._3.getTime % 500L == 0L))
+  }
+
   test("unknown job name is rejected like the reference's switch default") {
-    intercept[IllegalArgumentException] {
-      StarterDemo.buildJob("NoSuchJob", Seq("{}").toDF("value"), "1 minute")
+    for (name <- Seq("NoSuchJob", "StreamJobSingel")) {
+      val build = intercept[IllegalArgumentException] {
+        StarterDemo.buildJob(name, Seq("{}").toDF("value"), "1 minute")
+      }
+      val key = intercept[IllegalArgumentException](StarterDemo.upsertKey(name))
+      assert(build.getMessage == s"unknown JOB_CLASS_NAME: $name")
+      assert(key.getMessage == build.getMessage)
     }
   }
 
@@ -167,6 +180,12 @@ class DemoSpec extends SparkSpec {
         "interval must be day-time"),
       ("StarterDemo hopping interval", () => StarterDemo.buildJob("StreamJobSqlHopping", raw, "1 month"),
         "interval must be day-time"),
+      ("StarterDemo sub-second sliding interval",
+        () => StarterDemo.buildJob("StreamJobSingle", raw, "1500 milliseconds"),
+        "interval must be a whole number of seconds"),
+      ("StarterDemo negative sliding interval",
+        () => StarterDemo.buildJob("StreamJobSqlSliding", raw, "-1 minute"),
+        "interval must be non-negative"),
       ("lsh retention", () => StreamingJobs.lshCandidatesStreaming(docs, retention = "1 month"),
         "retention must be day-time"),
       ("simhash retention", () => StreamingJobs.simhashCandidatesStreaming(sigs, retention = "1 month"),

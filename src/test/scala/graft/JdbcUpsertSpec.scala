@@ -10,7 +10,6 @@ import graft.ingest.Ingest
 import graft.model.Tables
 import graft.ops.Windows
 import graft.sources.GeoJsonGen
-import graft.streaming.StreamingJobs._
 import graft.streaming.UpsertSink
 
 /** The JDBC upsert sink (X1/X2): streaming upserts through
@@ -29,7 +28,8 @@ class JdbcUpsertSpec extends SparkSpec {
     DerbyTables.create("t_stream", TumblingColumns)
     implicit val sql = spark.sqlContext
     val in = MemoryStream[(String, Timestamp)]
-    val q = tumblingCounts(in.toDF().toDF("kk", "t"), "t", "kk", "1 minute")
+    val q = Windows.tumblingCount(Ingest.withEventTime(in.toDF().toDF("kk", "t"), "t"),
+        $"t", $"kk", "1 minute")
       .writeStream.outputMode("update")
       .foreachBatch(UpsertSink.jdbcForeachBatchUpsert(url, "t_stream", tumblingKey) _)
       .start()
@@ -69,7 +69,8 @@ class JdbcUpsertSpec extends SparkSpec {
     implicit val sql = spark.sqlContext
     val ckpt = java.nio.file.Files.createTempDirectory("graft_jdbc_ckpt").toString
     val in = MemoryStream[(String, Timestamp)]
-    def startQuery() = tumblingCounts(in.toDF().toDF("kk", "t"), "t", "kk", "1 minute")
+    def startQuery() = Windows.tumblingCount(Ingest.withEventTime(in.toDF().toDF("kk", "t"), "t"),
+        $"t", $"kk", "1 minute")
       .writeStream.outputMode("append")
       .option("checkpointLocation", ckpt)
       .foreachBatch(UpsertSink.jdbcForeachBatchUpsert(url, "t_ckpt", tumblingKey) _)

@@ -33,19 +33,14 @@ class SourcesSpec extends SparkSpec {
 
   test("kinesis option contract: exact keys per connector (S1 swap surface)") {
     // the awslabs spark-sql-kinesis-connector documents exactly these
-    // namespaced option keys; the qubole fork the flat ones — if either
-    // map drifts, the documented one-line production swap
-    // (StarterDemo) silently stops configuring the stream
-    assert(Sources.kinesisOptions("input", "us-east-1", "TRIM_HORIZON", "aws-kinesis") ==
+    // namespaced option keys — if the map drifts, the documented
+    // one-line production swap (StarterDemo) silently stops
+    // configuring the stream
+    assert(Sources.kinesisOptions("input", "us-east-1", "TRIM_HORIZON") ==
       Map(
         "kinesis.streamName" -> "input",
         "kinesis.region" -> "us-east-1",
         "kinesis.startingPosition" -> "TRIM_HORIZON"))
-    assert(Sources.kinesisOptions("input", "eu-west-1", "LATEST", "kinesis") ==
-      Map(
-        "streamName" -> "input",
-        "endpointUrl" -> "https://kinesis.eu-west-1.amazonaws.com",
-        "startingPosition" -> "LATEST"))
   }
 
   test("kinesis connector integration: real reader construction (env-gated, skips without the jar)") {

@@ -2,9 +2,12 @@ package graft
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
+import graft.ingest.Ingest
 import graft.model.Tables
 import graft.ops.Windows
 import graft.streaming.StreamingJobs._
@@ -22,8 +25,8 @@ class StreamingSpec extends SparkSpec {
   test("streaming tumbling count converges to the batch result (append mode)") {
     implicit val sql = spark.sqlContext
     val in = MemoryStream[(String, Timestamp)]
-    val events = in.toDF().toDF("k", "t")
-    val q = tumblingCounts(events, "t", "k", "1 minute")
+    val events = Ingest.withEventTime(in.toDF().toDF("k", "t"), "t")
+    val q = Windows.tumblingCount(events, $"t", $"k", "1 minute")
       .writeStream.outputMode("append")
       .format("memory").queryName("tumbling_out")
       .start()
@@ -46,7 +49,8 @@ class StreamingSpec extends SparkSpec {
   test("streaming session count merges gap-linked events and converges to batch") {
     implicit val sql = spark.sqlContext
     val in = MemoryStream[(String, Timestamp)]
-    val q = sessionCounts(in.toDF().toDF("k", "t"), "t", "k", "1 minute")
+    val q = Windows.sessionCount(Ingest.withEventTime(in.toDF().toDF("k", "t"), "t"),
+        $"t", $"k", "1 minute")
       .writeStream.outputMode("append").format("memory").queryName("session_out")
       .start()
     try {
@@ -382,7 +386,8 @@ class StreamingSpec extends SparkSpec {
   test("streaming hopping count emits every overlapping window (append mode)") {
     implicit val sql = spark.sqlContext
     val in = MemoryStream[(String, Timestamp)]
-    val q = hoppingCounts(in.toDF().toDF("k", "t"), "t", "k", "2 minutes", "1 minute")
+    val q = Windows.hoppingCount(Ingest.withEventTime(in.toDF().toDF("k", "t"), "t"),
+        $"t", $"k", "2 minutes", "1 minute")
       .writeStream.outputMode("append").format("memory").queryName("hop_out").start()
     try {
       in.addData(("a", ts("2024-01-01 00:01:30")))
@@ -399,45 +404,56 @@ class StreamingSpec extends SparkSpec {
 
   test("observe metric reports emitted rows per batch (P6 logging parity)") {
     implicit val sql = spark.sqlContext
-    // progress events are dispatched asynchronously on the listener bus
-    // AFTER processAllAvailable() returns (and no-data batches may
-    // report 0 later), so collect every reported value and poll for the
-    // expected one instead of asserting on a single racy snapshot
-    val observed = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = {
-        val m = e.progress.observedMetrics
-        if (m.containsKey("graft_sink")) observed.add(m.get("graft_sink").getAs[Long]("rows_emitted"))
+    def line(cls: String, iso: String) =
+      s"""{"type":"Feature","properties":{"RECEIVED_ON":"$iso","N02_001":"$cls"}}"""
+    // rows_emitted of every batch that reported the observation, in
+    // batch order. Progress events are dispatched asynchronously on the
+    // listener bus AFTER processAllAvailable() returns, so poll until
+    // the last batch's report is in; no-data batches report 0.
+    def rowsEmitted(jobName: String, interval: String, batches: Seq[Seq[String]]): Seq[Long] = {
+      val name = s"obs_$jobName"
+      val reports = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
+      val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
+        import org.apache.spark.sql.streaming.StreamingQueryListener._
+        override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+        override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+        override def onQueryProgress(e: QueryProgressEvent): Unit = {
+          val m = e.progress.observedMetrics
+          if (e.progress.name == name && m.containsKey("graft_sink"))
+            reports.put(e.progress.batchId, m.get("graft_sink").getAs[Long]("rows_emitted"))
+        }
+      }
+      spark.streams.addListener(listener)
+      val in = MemoryStream[String]
+      val q = StarterDemo.buildJob(jobName, in.toDF(), interval)
+        .writeStream.outputMode("append").format("memory").queryName(name).start()
+      try {
+        batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
+        val last = q.lastProgress.batchId
+        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        while (!reports.containsKey(last) && System.nanoTime() < deadline) Thread.sleep(50)
+        reports.asScala.toSeq.sortBy(_._1).map(_._2).filter(_ != 0L)
+      } finally {
+        q.stop()
+        spark.streams.removeListener(listener)
       }
     }
-    spark.streams.addListener(listener)
-    val in = MemoryStream[(String, Timestamp)]
-    val q = tumblingCounts(in.toDF().toDF("k", "t"), "t", "k", "1 minute")
-      .writeStream.outputMode("append").format("memory").queryName("obs_out").start()
-    try {
-      in.addData(("a", ts("2024-01-01 00:00:10")), ("b", ts("2024-01-01 00:00:20")))
-      q.processAllAvailable()
-      in.addData(("a", ts("2024-01-01 00:05:00"))) // closes the 00:00 windows
-      q.processAllAvailable()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!observed.contains(2L) && System.nanoTime() < deadline) Thread.sleep(50)
-      // the SET of non-zero reports must be exactly {2}: an early or
-      // duplicate emission would add a second non-zero value and fail
-      val nonZero = observed.toArray(Array.empty[java.lang.Long]).filter(_ != 0L).toSet
-      assert(nonZero == Set(2L: java.lang.Long),
-        s"expected exactly one non-zero emission report of 2, saw $observed")
-    } finally {
-      q.stop()
-      spark.streams.removeListener(listener)
-    }
+    val firstBatch = Seq(line("11", "2020-09-14T09:20:10.000000"), line("14", "2020-09-14T09:20:40.000000"))
+    // the 09:25 event closes both 09:20 windows: one report of 2 rows,
+    // an early or duplicate emission would add a second non-zero report
+    assert(rowsEmitted("StreamJobSqlTumbling", "1 minute",
+      Seq(firstBatch, Seq(line("11", "2020-09-14T09:25:00.000000")))) == Seq(2L))
+    // the per-row job emits one row per accepted event in each batch
+    assert(rowsEmitted("StreamJobSingle", "30 minutes", Seq(firstBatch, Seq(
+      line("11", "2020-09-14T09:21:00.000000"), line("14", "2020-09-14T09:21:00.000000"),
+      line("18", "2020-09-14T09:22:00.000000")))) == Seq(2L, 3L))
   }
 
   test("late record (older than watermark) is dropped — zero-lateness parity") {
     implicit val sql = spark.sqlContext
     val in = MemoryStream[(String, Timestamp)]
-    val q = tumblingCounts(in.toDF().toDF("k", "t"), "t", "k", "1 minute")
+    val q = Windows.tumblingCount(Ingest.withEventTime(in.toDF().toDF("k", "t"), "t"),
+        $"t", $"k", "1 minute")
       .writeStream.outputMode("append").format("memory").queryName("late_out").start()
     try {
       in.addData(("a", ts("2024-01-01 00:00:10")))
@@ -668,8 +684,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming session windows merge and emit like batch (append mode)") {
     implicit val sql = spark.sqlContext
     val in = MemoryStream[(String, Timestamp)]
-    val q = Windows.sessionCount(
-        graft.ingest.Ingest.withEventTime(in.toDF().toDF("k", "t"), "t"),
+    val q = Windows.sessionCount(Ingest.withEventTime(in.toDF().toDF("k", "t"), "t"),
         $"t", $"k", "5 minutes")
       .writeStream.outputMode("append").format("memory").queryName("sess_out").start()
     try {
@@ -693,8 +708,8 @@ class StreamingSpec extends SparkSpec {
     val in = MemoryStream[(Long, Timestamp, Long, String)]
     val toEv = (df: org.apache.spark.sql.DataFrame) =>
       df.toDF("event_id", "ts", "user_id", "event_type")
-    val q = graft.streaming.StreamingJobs.sessionPathsStreaming(
-        toEv(in.toDF()), "ts", "user_id", "5 minutes")
+    val q = Windows.sessionPaths(Ingest.withEventTime(toEv(in.toDF()), "ts"),
+        $"ts", $"user_id", "5 minutes")
       .writeStream.outputMode("append").format("memory").queryName("paths_out").start()
     try {
       // user 7: out-of-order within one session (ids pin the order);

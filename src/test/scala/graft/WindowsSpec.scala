@@ -31,7 +31,7 @@ class WindowsSpec extends SparkSpec {
   }
 
   test("tumbling offset shifts alignment like Flink's TumblingEventTimeWindows offset") {
-    val out = Windows.tumblingOffsetCount(tiny, $"t", $"k", "60 seconds", "15 seconds")
+    val out = Windows.tumblingCount(tiny, $"t", $"k", "60 seconds", "15 seconds")
       .filter($"key" === "a").orderBy("window_start").collect()
     // windows: [23:59:15, 00:00:15) has 00:00:00; [00:00:15, 00:01:15) has the other two
     assert(out.map(r => (r.getTimestamp(2).toString, r.getLong(1))).toSeq ==
