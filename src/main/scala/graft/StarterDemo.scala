@@ -5,7 +5,7 @@ import java.sql.DriverManager
 import scala.annotation.tailrec
 import scala.util.Using
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructType, TimestampType}
@@ -46,7 +46,7 @@ object StarterDemo {
 
   /** The dispatch table — the Spark form of Starter.java's switch. */
   private val Jobs: Map[String, Job] = {
-    val tumbling = Job(Windows.tumblingCount(_, EventTime, RailwayClass, _), WindowKey)
+    val tumbling = groupWindow(hopping = false)
     // per-row trailing COUNT(*) OVER RANGE (30-minute frame in
     // StreamJobSingle.java:152); the latest count per event time
     // replays idempotently
@@ -58,15 +58,10 @@ object StarterDemo {
       // the reference hard-codes slide 0, degenerate in Flink and
       // rejected by Spark; slide = size/2 is the intended semantics
       // (SURVEY.md §7.3)
-      "StreamJobSqlHopping" -> Job((events, interval) =>
-        Windows.hoppingCount(events, EventTime, RailwayClass, interval,
-          s"${StreamingJobs.dayTimeMicros("interval", interval) / 2} microseconds"),
-        WindowKey),
+      "StreamJobSqlHopping" -> groupWindow(hopping = true),
       // TumblingEventTimeWindows.of(size, offset) with a 15-second
       // alignment offset (StreamJobTumblingOffset.java:157)
-      "StreamJobTumblingOffset" -> Job((events, interval) =>
-        Windows.tumblingCount(events, EventTime, RailwayClass, interval, offset = "15 seconds"),
-        WindowKey),
+      "StreamJobTumblingOffset" -> groupWindow(hopping = false, offset = "15 seconds"),
       "StreamJobSqlSliding" -> sliding,
       "StreamJobSingle" -> sliding)
   }
@@ -75,15 +70,44 @@ object StarterDemo {
     throw new IllegalArgumentException(s"unknown JOB_CLASS_NAME: $jobName"))
 
   /** Builds the job's output stream from raw string records; pure, so
-    * tests drive it with any source. Every job's output carries the
-    * `graft_sink` observation, the Spark-native form of the reference's
-    * per-row result logging (P6 — `log.warn("resultSet output: …")`,
+    * tests drive it with any source. A record without a railway class
+    * has no key to count or upsert under: it is dropped before the job
+    * and counted as `rejected_null_class` in the `graft_ingest`
+    * observation. Every job's output carries the `graft_sink`
+    * observation, the Spark-native form of the reference's per-row
+    * result logging (P6 — `log.warn("resultSet output: …")`,
     * StreamJobSqlTumbling.java:168): the emitted row count surfaces per
     * micro-batch in the query progress instead of as log lines in the
     * hot path. */
-  def buildJob(jobName: String, raw: DataFrame, interval: String): DataFrame =
-    job(jobName).plan(Ingest.withEventTime(Ingest.parseGeoJson(raw), "received_on"), interval)
-      .observe("graft_sink", count(lit(1)).as("rows_emitted"))
+  def buildJob(jobName: String, raw: DataFrame, interval: String): DataFrame = {
+    val plan = job(jobName).plan
+    val events = Ingest.withEventTime(Ingest.parseGeoJson(raw), "received_on")
+      .observe("graft_ingest", count_if(RailwayClass.isNull).as("rejected_null_class"))
+      .filter(RailwayClass.isNotNull)
+    plan(events, interval).observe("graft_sink", count(lit(1)).as("rows_emitted"))
+  }
+
+  /** The events as the keyed rows the stateful operators take. */
+  private def keyed(events: DataFrame): Dataset[StreamingJobs.KeyedEvent] = {
+    import events.sparkSession.implicits._
+    events.select(RailwayClass.as("key"), EventTime.as("ts")).as[StreamingJobs.KeyedEvent]
+  }
+
+  /** A tumbling (slide = size) or hopping (slide = size/2) count. A
+    * batch frame runs the Catalyst window aggregate; a stream runs
+    * [[StreamingJobs.windowCountStreaming]], which writes each window in
+    * the micro-batch that closes it instead of the one after. */
+  private def groupWindow(hopping: Boolean, offset: String = "0 seconds"): Job =
+    Job((events, interval) => {
+      val slide =
+        if (hopping) s"${StreamingJobs.dayTimeMicros("interval", interval) / 2} microseconds"
+        else interval
+      if (events.isStreaming) {
+        val out = StreamingJobs.windowCountStreaming(keyed(events), interval, slide, offset).toDF()
+        if (hopping) out.withColumn("window_rowtime", Windows.rowtime(col("window_end"))) else out
+      } else if (hopping) Windows.hoppingCount(events, EventTime, RailwayClass, interval, slide)
+      else Windows.tumblingCount(events, EventTime, RailwayClass, interval, offset)
+    }, WindowKey)
 
   /** The sliding frame runs on whole seconds, so an interval the frame
     * cannot hold exactly is rejected rather than truncated. */
@@ -91,10 +115,7 @@ object StarterDemo {
     val us = StreamingJobs.dayTimeMicros("interval", interval)
     require(us >= 0, s"interval must be non-negative, got: $interval")
     require(us % 1000000L == 0, s"interval must be a whole number of seconds, got: $interval")
-    import events.sparkSession.implicits._
-    StreamingJobs.slidingCountStreaming(
-      events.select(RailwayClass.as("key"), EventTime.as("ts")).as[StreamingJobs.KeyedEvent],
-      frameSeconds = us / 1000000L).toDF()
+    StreamingJobs.slidingCountStreaming(keyed(events), frameSeconds = us / 1000000L).toDF()
   }
 
   /** The key the job's sink upserts on. */

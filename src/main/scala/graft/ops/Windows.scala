@@ -66,8 +66,11 @@ object Windows {
         col("key"), col("cnt"),
         col("window.start").as("window_start"),
         col("window.end").as("window_end"),
-        (col("window.end") - expr("INTERVAL 1 MILLISECOND")).as("window_rowtime"))
+        rowtime(col("window.end")).as("window_rowtime"))
   }
+
+  /** A group window's rowtime, Flink's `HOP_ROWTIME`: its end − 1 ms. */
+  def rowtime(windowEnd: Column): Column = windowEnd - expr("INTERVAL 1 MILLISECOND")
 
   /** W6 — cumulative (expanding) windows: per `maxSize` bucket, counts
     * over [start, start+step), [start, start+2·step), …,

@@ -89,12 +89,15 @@ object EventQueries {
     val j = grid.join(b, Seq("event_type", "m"), "left")
     val wPrev = Window.partitionBy("event_type").orderBy("m")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wNext = Window.partitionBy("event_type").orderBy("m")
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    // the next anchor is the previous one in descending order: a running
+    // frame like wPrev, linear per type (a currentRow → unboundedFollowing
+    // frame re-scans the rest of the partition for every row)
+    val wNext = Window.partitionBy("event_type").orderBy(desc("m"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     j.withColumn("pv", last(col("v"), ignoreNulls = true).over(wPrev))
       .withColumn("pm", last(when(col("v").isNotNull, col("m")), ignoreNulls = true).over(wPrev))
-      .withColumn("nv", first(col("v"), ignoreNulls = true).over(wNext))
-      .withColumn("nm", first(when(col("v").isNotNull, col("m")), ignoreNulls = true).over(wNext))
+      .withColumn("nv", last(col("v"), ignoreNulls = true).over(wNext))
+      .withColumn("nm", last(when(col("v").isNotNull, col("m")), ignoreNulls = true).over(wNext))
       .select(col("event_type"), col("m").as("minute"),
         when(col("v").isNotNull, col("v")).otherwise(
           col("pv") + (col("nv") - col("pv")) *

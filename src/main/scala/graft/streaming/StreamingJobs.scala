@@ -2,7 +2,10 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
 import org.apache.spark.sql.catalyst.util.IntervalUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -11,15 +14,17 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.ingest.Ingest
 import graft.ops.Windows
 
-/** Structured-Streaming operators that have no batch plan to reuse.
-  * The group-window jobs (tumbling, hopping, session) need none: the
-  * *same* pure plan functions as batch ([[Windows]]) run on a stream
-  * watermarked by [[Ingest.withEventTime]] — one logical-plan layer,
-  * two run modes (SURVEY.md §7.1) — and [[graft.StarterDemo]] composes
-  * the reference's jobs from them. The per-row OVER aggregation needs
-  * dedicated streaming code, because Structured Streaming has no OVER:
-  * [[slidingCountStreaming]] implements it with
-  * `flatMapGroupsWithState`.
+/** Structured-Streaming operators that have no batch plan to reuse, or
+  * whose batch plan emits too late on a stream. Session windows need
+  * none: the *same* pure plan functions as batch ([[Windows]]) run on a
+  * stream watermarked by [[Ingest.withEventTime]] — one logical-plan
+  * layer, two run modes (SURVEY.md §7.1). The reference's jobs, which
+  * [[graft.StarterDemo]] composes, need two `flatMapGroupsWithState`
+  * operators: [[slidingCountStreaming]] for the per-row OVER
+  * aggregation, because Structured Streaming has no OVER, and
+  * [[windowCountStreaming]] for the tumbling and hopping counts,
+  * because Spark's window aggregate emits a window one micro-batch after
+  * the batch that closes it.
   */
 object StreamingJobs {
 
@@ -1667,8 +1672,6 @@ object StreamingJobs {
       if (evictMs.isDefined) GroupStateTimeout.EventTimeTimeout
       else GroupStateTimeout.NoTimeout
 
-    def micros(t: Timestamp): Long = t.getTime * 1000L + (t.getNanos % 1000000) / 1000L
-
     // grouping on the column skips groupByKey's AppendColumns
     // deserialize pass; the shuffle hashes the same key string
     events.toDF().groupBy(col("key")).as[String, KeyedEvent]
@@ -1677,8 +1680,18 @@ object StreamingJobs {
           if (state.hasTimedOut) {
             state.remove() // watermark passed newest event + frame + idle retention
             Iterator.empty
-          } else slidingBatch(key, rows, state, frameUs, evictMs, micros)
+          } else slidingBatch(key, rows, state, frameUs, evictMs)
       }
+  }
+
+  /** Epoch microseconds of a timestamp, Spark's own resolution. */
+  private def micros(t: Timestamp): Long = t.getTime * 1000L + (t.getNanos % 1000000) / 1000L
+
+  /** The timestamp at `us` epoch microseconds. */
+  private def timestamp(us: Long): Timestamp = {
+    val t = new Timestamp(Math.floorDiv(us, 1000L))
+    t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
+    t
   }
 
   /** One micro-batch of the sliding OVER state machine (split out so the
@@ -1691,8 +1704,7 @@ object StreamingJobs {
     * at most twice per batch. */
   private def slidingBatch(
       key: String, rows: Iterator[KeyedEvent], state: GroupState[SlidingState],
-      frameUs: Long, evictMs: Option[Long],
-      micros: Timestamp => Long): Iterator[SlidingCount] = {
+      frameUs: Long, evictMs: Option[Long]): Iterator[SlidingCount] = {
     val st = state.getOption.getOrElse(SlidingState(Long.MinValue, Nil))
     // stable sort (TimSort): equal-ts peers keep their input order
     val batch = rows.map(e => (micros(e.ts), e)).toArray.sortBy(_._1)
@@ -1733,5 +1745,103 @@ object StreamingJobs {
       if (maxSeen != Long.MinValue) state.setTimeoutTimestamp(maxSeen / 1000L + ms)
     }
     out.result().iterator
+  }
+
+  /** One group-window count: the columns of [[Windows.tumblingCount]]. */
+  case class WindowCount(key: String, cnt: Long, window_start: Timestamp, window_end: Timestamp)
+
+  /** Per-key state of [[windowCountStreaming]]: the newest accepted
+    * event time (epoch micros) and the key's open windows, as ascending
+    * starts with their counts. */
+  case class WindowState(maxSeenUs: Long, startsUs: Array[Long], counts: Array[Long])
+
+  /** W1/W2/W4/W5 streaming — tumbling and hopping counts that emit each
+    * window in the micro-batch that closes it.
+    *
+    * Spark's append-mode window aggregate emits a window once the
+    * watermark passes its end, and a batch's watermark is the newest
+    * event time of the batches before it: the window that batch N's
+    * events close is written by batch N+1. The reference fires a window
+    * on the first record past its end, because its punctuated watermark
+    * advances with every record (StreamJobSqlTumbling.java:122–134).
+    * This operator applies that rule per key:
+    *
+    *  - windows are `window(ts, size, slide, offset)`'s, half-open
+    *    `[start, end)`, one per row for tumbling (`slide == size`);
+    *  - a key's window is final at the end of the first batch in which
+    *    an event of that key reaches its end + delay, or the watermark
+    *    reaches its end. For the second case every key with open
+    *    windows sets an event-time timeout at its earliest open end
+    *    − 1 ms, so a quiet key's window flushes in Spark's no-data batch;
+    *  - within a batch, out-of-order rows all count. A row counts only
+    *    in the windows its key has not yet emitted, and a row whose
+    *    windows are all emitted is dropped: an emitted window is never
+    *    emitted again or reopened. Rows at or below the watermark never
+    *    reach the operator (Spark's late-row filter).
+    *
+    * Unlike the reference's global watermark, another key's record does
+    * not close a key's window; the watermark does, one batch later.
+    * `delay` is the `ts` column's watermark delay
+    * ([[Ingest.withEventTime]]). State holds only keys with open
+    * windows: once a key's windows are all emitted the watermark has
+    * passed every one of them, so its late-row filter drops whatever
+    * the state would have, and the state is removed.
+    */
+  def windowCountStreaming(events: Dataset[KeyedEvent], size: String, slide: String,
+      offset: String = "0 seconds"): Dataset[WindowCount] = {
+    import events.sparkSession.implicits._
+    val sizeUs = dayTimeMicros("window size", size)
+    val slideUs = dayTimeMicros("window slide", slide)
+    val offsetUs = dayTimeMicros("window offset", offset)
+    // the shapes window() rejects
+    require(slideUs > 0 && slideUs <= sizeUs,
+      s"window slide must be positive and at most the size, got size $size, slide $slide")
+    require(math.abs(offsetUs) < slideUs, s"window offset must be shorter than the slide, got: $offset")
+    val meta = events.schema("ts").metadata
+    require(meta.contains(EventTimeWatermark.delayKey), "windowCountStreaming needs a watermark on ts")
+    val delayUs = meta.getLong(EventTimeWatermark.delayKey) * 1000L
+    events.toDF().groupBy(col("key")).as[String, KeyedEvent]
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        (key: String, rows: Iterator[KeyedEvent], state: GroupState[WindowState]) =>
+          windowBatch(key, rows, state, sizeUs, slideUs, offsetUs, delayUs)
+      }
+  }
+
+  /** One call of the group-window operator: a batch of `key`'s rows, or
+    * none when the key timed out. */
+  private def windowBatch(
+      key: String, rows: Iterator[KeyedEvent], state: GroupState[WindowState],
+      sizeUs: Long, slideUs: Long, offsetUs: Long, delayUs: Long): Iterator[WindowCount] = {
+    def reached(maxSeen: Long) = if (maxSeen == Long.MinValue) Long.MinValue else maxSeen - delayUs
+    val st = state.getOption.getOrElse(WindowState(Long.MinValue, Array.emptyLongArray, Array.emptyLongArray))
+    val open = mutable.LongMap.from(st.startsUs.zip(st.counts))
+    val emittedTo = reached(st.maxSeenUs) // every window ending here or earlier was emitted
+    var maxSeen = st.maxSeenUs
+    rows.foreach { e =>
+      if (e.ts != null) {
+        val t = micros(e.ts)
+        var start = t - Math.floorMod(t - offsetUs, slideUs) // latest window holding t
+        var accepted = false
+        while (start > t - sizeUs && start + sizeUs > emittedTo) {
+          open(start) = open.getOrElse(start, 0L) + 1L
+          accepted = true
+          start -= slideUs
+        }
+        if (accepted) maxSeen = math.max(maxSeen, t)
+      }
+    }
+    val closeTo = math.max(reached(maxSeen), state.getCurrentWatermarkMs() * 1000L)
+    val out = open.keys.filter(_ + sizeUs <= closeTo).toArray.sorted.map { s =>
+      WindowCount(key, open.remove(s).get, timestamp(s), timestamp(s + sizeUs))
+    }
+    if (open.isEmpty) state.remove()
+    else {
+      val starts = open.keys.toArray.sorted
+      state.update(WindowState(maxSeen, starts, starts.map(open(_))))
+      // a key times out once the watermark is past its timeout, so the
+      // earliest open end − 1 ms fires when the watermark reaches that end
+      state.setTimeoutTimestamp(Math.floorDiv(starts.head + sizeUs + 999L, 1000L) - 1L)
+    }
+    out.iterator
   }
 }

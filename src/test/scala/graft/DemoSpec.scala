@@ -180,6 +180,8 @@ class DemoSpec extends SparkSpec {
         "interval must be day-time"),
       ("StarterDemo hopping interval", () => StarterDemo.buildJob("StreamJobSqlHopping", raw, "1 month"),
         "interval must be day-time"),
+      ("group-window size", () => StreamingJobs.windowCountStreaming(events, "1 month", "1 minute"),
+        "window size must be day-time"),
       ("StarterDemo sub-second sliding interval",
         () => StarterDemo.buildJob("StreamJobSingle", raw, "1500 milliseconds"),
         "interval must be a whole number of seconds"),

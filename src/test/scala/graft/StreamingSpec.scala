@@ -46,39 +46,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming session count merges gap-linked events and converges to batch") {
-    implicit val sql = spark.sqlContext
-    val in = MemoryStream[(String, Timestamp)]
-    val q = Windows.sessionCount(Ingest.withEventTime(in.toDF().toDF("k", "t"), "t"),
-        $"t", $"k", "1 minute")
-      .writeStream.outputMode("append").format("memory").queryName("session_out")
-      .start()
-    try {
-      val data = Seq(
-        ("a", ts("2024-01-01 00:00:10")), // session 1 of a …
-        ("a", ts("2024-01-01 00:00:50")), // … 40 s later: same session (< 1 min gap)
-        ("a", ts("2024-01-01 00:03:00")), // 130 s later: NEW session
-        ("b", ts("2024-01-01 00:00:30"))) // b's only session
-      in.addData(data: _*)
-      q.processAllAvailable()
-      in.addData(("a", ts("2024-01-01 00:30:00"))) // watermark past every session end
-      q.processAllAvailable()
-      in.addData(("a", ts("2024-01-01 00:40:00")))
-      q.processAllAvailable()
-      val emitted = spark.table("session_out")
-        .filter($"session_start" < ts("2024-01-01 00:10:00"))
-        .as[(String, Long, Timestamp, Timestamp)].collect().toSet
-      val batch = Windows.sessionCount(data.toDF("k", "t"), $"t", $"k", "1 minute")
-        .as[(String, Long, Timestamp, Timestamp)].collect().toSet
-      assert(emitted == batch)
-      // the two gap-linked events merged: one session [00:00:10, 00:01:50)
-      assert(emitted.contains(("a", 2L, ts("2024-01-01 00:00:10"), ts("2024-01-01 00:01:50"))))
-      // the 130 s-later event opened a fresh single-event session
-      assert(emitted.contains(("a", 1L, ts("2024-01-01 00:03:00"), ts("2024-01-01 00:04:00"))))
-      assert(emitted.contains(("b", 1L, ts("2024-01-01 00:00:30"), ts("2024-01-01 00:01:30"))))
-    } finally q.stop()
-  }
-
   test("streaming hourly funnel finalizes staged conversions at bucket end, out-of-order safe") {
     implicit val sql = spark.sqlContext
     val in = MemoryStream[(Long, String, Timestamp)]
@@ -439,10 +406,12 @@ class StreamingSpec extends SparkSpec {
       }
     }
     val firstBatch = Seq(line("11", "2020-09-14T09:20:10.000000"), line("14", "2020-09-14T09:20:40.000000"))
-    // the 09:25 event closes both 09:20 windows: one report of 2 rows,
-    // an early or duplicate emission would add a second non-zero report
+    // class 11's 09:25 event closes its 09:20 window in the batch that
+    // reads it; class 14 has no later event, so the watermark (09:25)
+    // flushes its window in the next, no-data batch. An early or a
+    // duplicate emission would add a third non-zero report
     assert(rowsEmitted("StreamJobSqlTumbling", "1 minute",
-      Seq(firstBatch, Seq(line("11", "2020-09-14T09:25:00.000000")))) == Seq(2L))
+      Seq(firstBatch, Seq(line("11", "2020-09-14T09:25:00.000000")))) == Seq(1L, 1L))
     // the per-row job emits one row per accepted event in each batch
     assert(rowsEmitted("StreamJobSingle", "30 minutes", Seq(firstBatch, Seq(
       line("11", "2020-09-14T09:21:00.000000"), line("14", "2020-09-14T09:21:00.000000"),
@@ -683,24 +652,43 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming session windows merge and emit like batch (append mode)") {
     implicit val sql = spark.sqlContext
-    val in = MemoryStream[(String, Timestamp)]
-    val q = Windows.sessionCount(Ingest.withEventTime(in.toDF().toDF("k", "t"), "t"),
-        $"t", $"k", "5 minutes")
-      .writeStream.outputMode("append").format("memory").queryName("sess_out").start()
-    try {
-      // two events 2 min apart → one session; then a 20-min gap
-      in.addData(("a", ts("2024-01-01 00:00:00")), ("a", ts("2024-01-01 00:02:00")))
-      q.processAllAvailable()
-      in.addData(("a", ts("2024-01-01 00:30:00"))) // watermark passes session 1 end
-      q.processAllAvailable()
-      in.addData(("a", ts("2024-01-01 01:00:00"))) // flush session 2
-      q.processAllAvailable()
-      val got = spark.table("sess_out")
-        .select("key", "cnt", "session_start", "session_end")
-        .as[(String, Long, Timestamp, Timestamp)].collect().toSet
-      assert(got.contains(("a", 2L, ts("2024-01-01 00:00:00"), ts("2024-01-01 00:07:00"))))
-      assert(got.contains(("a", 1L, ts("2024-01-01 00:30:00"), ts("2024-01-01 00:35:00"))))
-    } finally q.stop()
+    // each feed: the session gap, then micro-batches whose last event
+    // lies past every session end of interest (sessions starting before
+    // 00:10 are compared with the batch run over the first batch's rows)
+    val feeds = Seq(
+      // two events 2 min apart → one session; then a 28-min gap
+      "5 minutes" -> Seq(
+        Seq(("a", ts("2024-01-01 00:00:00")), ("a", ts("2024-01-01 00:02:00")))),
+      // gap-linked events 40 s apart merge; 130 s later opens a new
+      // session; b has its own
+      "1 minute" -> Seq(
+        Seq(("a", ts("2024-01-01 00:00:10")), ("a", ts("2024-01-01 00:00:50")),
+          ("a", ts("2024-01-01 00:03:00")), ("b", ts("2024-01-01 00:00:30")))))
+    for (((gap, batches), i) <- feeds.zipWithIndex) {
+      val in = MemoryStream[(String, Timestamp)]
+      val q = Windows.sessionCount(Ingest.withEventTime(in.toDF().toDF("k", "t"), "t"),
+          $"t", $"k", gap)
+        .writeStream.outputMode("append").format("memory").queryName(s"sess_out_$i").start()
+      try {
+        (batches ++ Seq(Seq(("a", ts("2024-01-01 00:30:00"))), Seq(("a", ts("2024-01-01 01:00:00")))))
+          .foreach { b => in.addData(b: _*); q.processAllAvailable() }
+        val got = spark.table(s"sess_out_$i")
+          .filter($"session_start" < ts("2024-01-01 00:10:00"))
+          .select("key", "cnt", "session_start", "session_end")
+          .as[(String, Long, Timestamp, Timestamp)].collect().toSet
+        val batch = Windows.sessionCount(batches.flatten.toDF("k", "t"), $"t", $"k", gap)
+          .as[(String, Long, Timestamp, Timestamp)].collect().toSet
+        assert(got == batch, gap)
+      } finally q.stop()
+    }
+    // the session windows themselves, spelled out
+    val five = spark.table("sess_out_0").as[(String, Long, Timestamp, Timestamp)].collect().toSet
+    assert(five.contains(("a", 2L, ts("2024-01-01 00:00:00"), ts("2024-01-01 00:07:00"))))
+    assert(five.contains(("a", 1L, ts("2024-01-01 00:30:00"), ts("2024-01-01 00:35:00"))))
+    val one = spark.table("sess_out_1").as[(String, Long, Timestamp, Timestamp)].collect().toSet
+    assert(one.contains(("a", 2L, ts("2024-01-01 00:00:10"), ts("2024-01-01 00:01:50"))))
+    assert(one.contains(("a", 1L, ts("2024-01-01 00:03:00"), ts("2024-01-01 00:04:00"))))
+    assert(one.contains(("b", 1L, ts("2024-01-01 00:00:30"), ts("2024-01-01 00:01:30"))))
   }
 
   test("streaming session paths finalize in (ts, event_id) order == batch path frame") {

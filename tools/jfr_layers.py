@@ -3,10 +3,12 @@
 
     python3 tools/jfr_layers.py run.jfr
     python3 tools/jfr_layers.py run.jfr --count JacksonParser --count StreamDecoder
+    python3 tools/jfr_layers.py run.jfr --threads '^stream execution thread'
 
 Reads the `jdk.ExecutionSample` events of a `.jfr` file through the JDK's
-`jfr print` (stack depth 64), keeps the samples of Spark executor threads
-and walks each stack from the innermost frame outwards: the
+`jfr print` (stack depth 64), keeps the samples of the threads whose name
+matches `--threads` (default: Spark's executor threads) and walks each
+stack from the innermost frame outwards: the
 first frame that matches a layer's patterns decides the sample's layer
 (layers are tried in the order of LAYERS for that frame). A sample no frame
 matches is `other`. Prints count and share per layer; `--count PATTERN`
@@ -47,7 +49,7 @@ LAYERS = [
                    "org.apache.spark.sql.execution.", "graft.streaming.StreamingJobs", "graft.ops."]),
 ]
 
-EXECUTOR = re.compile(r"^Executor task launch worker")
+EXECUTOR = r"^Executor task launch worker"
 FRAME = re.compile(r"^\s+([\w$.<>/]+)\(")
 THREAD = re.compile(r'sampledThread = "([^"]*)"')
 
@@ -93,13 +95,17 @@ def main(argv):
     ap.add_argument("input", help=".jfr recording")
     ap.add_argument("--count", action="append", default=[], metavar="PATTERN",
                     help="also count kept samples with a frame containing PATTERN")
+    ap.add_argument("--threads", default=EXECUTOR, metavar="REGEX",
+                    help="keep the samples of threads whose name matches REGEX "
+                         f"(default {EXECUTOR!r}, Spark's executor threads)")
     args = ap.parse_args(argv)
+    threads = re.compile(args.threads)
     counts = {name: 0 for name, _ in LAYERS}
     counts["other"] = 0
     hits = {p: 0 for p in args.count}
     total = 0
     for thread, frames in samples(read_lines(args.input)):
-        if not EXECUTOR.search(thread):
+        if not threads.search(thread):
             continue
         total += 1
         counts[layer_of(frames)] += 1
