@@ -166,9 +166,10 @@ object StarterDemo {
 
   private val Flags = Seq("--job", "--source", "--interval", "--checkpoint", "--table", "--jdbc")
 
-  /** The CLI's `--flag value` pairs. An unknown flag or a flag without
-    * a value is an error, so a mistyped `--jdbc` cannot silently fall
-    * back to the default database. */
+  /** The CLI's `--flag value` pairs. An unknown flag, a flag without
+    * a value or a malformed `--source` is an error, so a mistyped
+    * `--jdbc` cannot silently fall back to the default database and a
+    * bad source fails before Spark starts. */
   def parseArgs(args: Seq[String]): Map[String, String] = {
     @tailrec def go(rest: List[String], opts: Map[String, String]): Map[String, String] =
       rest match {
@@ -179,7 +180,20 @@ object StarterDemo {
         case flag :: value :: tail if !value.startsWith("--") => go(tail, opts + (flag -> value))
         case flag :: _ => throw new IllegalArgumentException(s"flag $flag needs a value")
       }
-    go(args.toList, Map.empty)
+    val opts = go(args.toList, Map.empty)
+    opts.get("--source").foreach(sourceFields)
+    opts
+  }
+
+  /** A `--source` value split into its kind and fields: `dir` and a
+    * path, or `kinesis`, a stream, a region and an optional initial
+    * position. Any other shape, or an empty field, is an error. */
+  private def sourceFields(source: String): List[String] = source.split(":", -1).toList match {
+    case "dir" :: _ if source.length > "dir:".length => List("dir", source.drop("dir:".length))
+    case fields @ "kinesis" :: rest if (rest.size == 2 || rest.size == 3) && rest.forall(_.nonEmpty) =>
+      fields
+    case _ => throw new IllegalArgumentException(
+      s"unknown --source: $source (dir:<path> | kinesis:<stream>:<region>[:<pos>])")
   }
 
   /** CLI — properties mirror the reference's config keys:
@@ -219,8 +233,8 @@ object StarterDemo {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val raw = source.split(":", 2) match {
-      case Array("dir", path) =>
+    val raw = sourceFields(source) match {
+      case List("dir", path) =>
         val dir = java.nio.file.Paths.get(path)
         if (!java.nio.file.Files.isDirectory(dir) ||
             !Using.resource(java.nio.file.Files.list(dir))(_.findFirst().isPresent))
@@ -231,12 +245,7 @@ object StarterDemo {
             startEpochMs = java.time.Instant.parse("2020-09-14T09:20:00Z").toEpochMilli,
             stepMs = 1200L)
         Sources.geojsonLinesDir(spark, path)
-      case Array("kinesis", rest) =>
-        val parts = rest.split(":")
-        Sources.kinesis(spark, parts(0), parts(1),
-          if (parts.length > 2) parts(2) else "LATEST")
-      case _ =>
-        throw new IllegalArgumentException(s"unknown --source: $source (dir:<path> | kinesis:<stream>:<region>[:<pos>])")
+      case fields => Sources.kinesis(spark, fields(1), fields(2), fields.lift(3).getOrElse("LATEST"))
     }
 
     val q = start(jobName, raw, interval, ckpt, table, url)

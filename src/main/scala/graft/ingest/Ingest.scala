@@ -29,11 +29,8 @@ object Ingest {
     * `current_timestamp()` (reference semantics); deterministic tests and
     * oracles pass a constant.
     */
-  def parseTimestamp(
-      raw: Column,
-      fmt: String = Schemas.isoMicros,
-      fallback: Column = current_timestamp()): Column =
-    coalesce(try_to_timestamp(raw, lit(fmt)), fallback)
+  def parseTimestamp(raw: Column, fallback: Column = current_timestamp()): Column =
+    coalesce(try_to_timestamp(raw, lit(Schemas.isoMicros)), fallback)
 
   /** S2 + P1 — GeoJSON envelope → (railway_class, received_on).
     *
@@ -58,8 +55,7 @@ object Ingest {
     df.select(
       parsed.getField("properties").getField("N02_001").as("railway_class"),
       parseTimestamp(
-        parsed.getField("properties").getField("RECEIVED_ON"),
-        Schemas.isoMicros, fallback).as("received_on"))
+        parsed.getField("properties").getField("RECEIVED_ON"), fallback).as("received_on"))
   }
 
   /** P3 — event-time assignment with zero tolerated out-of-orderness.
@@ -70,6 +66,6 @@ object Ingest {
     * than per record, so emission *timing* differs but converged window
     * contents match (SURVEY.md §1.4). No-op on batch frames.
     */
-  def withEventTime(df: DataFrame, tsCol: String, delay: String = "0 seconds"): DataFrame =
-    if (df.isStreaming) df.withWatermark(tsCol, delay) else df
+  def withEventTime(df: DataFrame, tsCol: String): DataFrame =
+    if (df.isStreaming) df.withWatermark(tsCol, "0 seconds") else df
 }

@@ -16,10 +16,9 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * O(|a|·|b|): rows outside the band skip the quadratic work, and on
   * a parquet scan the band's length arithmetic is codegen'd straight
   * into the scan stage. This encodes, as an optimizer rule, the same
-  * bound the fuzzy-join operators apply by hand
-  * (RelationalQueries.fuzzyNameMatches, StreamingJobs
-  * .fuzzyMatchStreaming) — a query author who forgets it now gets it
-  * from the planner.
+  * bound the fuzzy join applies by hand
+  * (RelationalQueries.fuzzyNameMatches) — a query author who forgets
+  * it now gets it from the planner.
   *
   * Soundness/termination:
   *  - only `lev ≤ k` / `lev < k` conjuncts with deterministic string

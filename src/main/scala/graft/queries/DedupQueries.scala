@@ -266,8 +266,7 @@ object DedupQueries {
         .persist()) // shingle index: scanned by both sides of the self-joins
 
   /** jac = |∩| / (|a|+|b|-|∩|) with the intersection computed exactly
-    * once per pair (same value as TextFunctions.jaccard). Shared with
-    * the streaming decontamination job (same `ga`/`gb` contract). */
+    * once per pair (same value as TextFunctions.jaccard). */
   private[graft] def jaccardFromCounts(df: DataFrame): DataFrame =
     df.withColumn("inter",
         graft.functions.KernelExpressions.sortedIntersectCount(col("ga"), col("gb")).cast("double"))
@@ -479,11 +478,8 @@ object DedupQueries {
     * with empty shingle sets are excluded BEFORE banding: they all
     * share the all-sentinel signature, so a corpus with m short docs
     * would otherwise produce m²/2 candidate pairs per band that verify
-    * to jac = 0 — quadratic garbage at scale. Pure column expressions,
-    * so the same projection runs on a stream
-    * ([[graft.streaming.StreamingJobs.lshCandidatesStreaming]]).
-    * `passthrough` columns (e.g. the stream's event-time column) ride
-    * along unchanged. */
+    * to jac = 0 — quadratic garbage at scale. Pure column expressions.
+    * `passthrough` columns ride along unchanged. */
   private[graft] def bandedFromShingles(sh: DataFrame, passthrough: Seq[String] = Nil): DataFrame = {
     val extra = passthrough.map(col)
     sh.filter(size(col("g")) > 0)
@@ -493,17 +489,6 @@ object DedupQueries {
       .select(col("doc_id") +: col("bh.band").as("band") +: col("bh.bucket").as("bucket") +:
         extra: _*)
   }
-
-  /** Banded rows straight from (doc_id, text [, passthrough…]) — the
-    * streaming entry (the event-time column passes through for the
-    * watermark). */
-  private[graft] def bandedDocs(docsWithText: DataFrame, passthrough: Seq[String] = Nil): DataFrame =
-    bandedFromShingles(
-      docsWithText
-        .select(col("doc_id") +: passthrough.map(col) :+ tokens(col("text")).as("toks"): _*)
-        .select(col("doc_id") +: passthrough.map(col) :+
-          graft.functions.KernelExpressions.sortedNgramSet(col("toks"), 3).as("g"): _*),
-      passthrough)
 
   /** A (band, bucket) group larger than this is a heavy hitter — a
     * boilerplate template shared by m documents lands them in the SAME
@@ -556,11 +541,7 @@ object DedupQueries {
     * corpora (10⁹⁺ distinct signatures, where the 31-bit key space
     * itself saturates) — and at THAT scale the production
     * configuration is the 62-bit wide form whose 2²⁴⁺-value block
-    * pairs stay ~4000× sparser. The streaming twin rides the same
-    * rail since round 16 (its per-bucket anchor state bounds RECALL
-    * too — the old LshBucketCap default saturated at every scale
-    * ≥ sf0.1; StreamingDedupSpec plants the loss above a forced low
-    * cap).
+    * pairs stay ~4000× sparser.
     *
     * `SPARK_GRAFT_SIMHASH_CAP` (test-only override): forces the rail
     * low so the harness precondition is provable end-to-end — with a
@@ -840,9 +821,9 @@ object DedupQueries {
     * train → eval so the drop policy reads off the result. */
   private[queries] def decontaminateLsh(s: SparkSession, dir: String): DataFrame = {
     // ride the cached corpus signatures instead of re-deriving them
-    // (r17, guide §1.2): bandedDocs re-ran tokenize + shingle + 64-perm
-    // MinHash over the whole corpus on every invocation, but the rows
-    // are [[corpusBands]] (same tokens→sortedNgramSet(3)→minhash→
+    // (r17, guide §1.2): banding from text re-ran tokenize + shingle +
+    // 64-perm MinHash over the whole corpus on every invocation, but the
+    // rows are [[corpusBands]] (same tokens→sortedNgramSet(3)→minhash→
     // lshBands arithmetic over the same size(g)>0 filter) plus the
     // `source` column — a broadcast doc_id equi-join against the
     // 2-column docs projection attaches it without any corpus pass.
@@ -1275,8 +1256,8 @@ object DedupQueries {
       val sh = shingled(s, dir)
       // MEETING-COUNT candidate generation over the shared memoized
       // τ = 0.7 prefix index (r17 — replaces the per-run full ranked
-      // index + PPJoin+ positional bound; chosen by the sf10 stage
-      // probe, ContainmentProbe):
+      // index + PPJoin+ positional bound; chosen by an sf10 stage
+      // probe):
       //
       //  - A's side is the memoized τ = 0.7 prefix P07(A) (the LONGER
       //    prefix, |P07| = na − ⌈0.7·na⌉ + 1 ≥ the τ = 0.9 prefix);
@@ -1292,7 +1273,7 @@ object DedupQueries {
       //  - A size filter rides along: B can only contain A's
       //    τ-fraction if nb ≥ ⌈τ·na⌉.
       //
-      // Measured at sf10 (ContainmentProbe, 32 parts, warm best-of-2):
+      // Measured at sf10 (32 parts, warm best-of-2):
       // the old positional bound pruned the 8.4 M raw candidate rows
       // only to 7.3 M distinct pairs, whose array-verify join was the
       // query's 24 s tail; the meeting-count bound prunes the same
@@ -1781,7 +1762,7 @@ object DedupQueries {
       // short (~6 chars), so 16 codegen'd hashes of one token are
       // cheap. An earlier loaded-window A/B had shown the opposite at
       // 3 reps — window drift, not signal. Outputs were identical
-      // either way (graft.queries.SubstrAb keeps the harness).)
+      // either way.)
       val gram = slice(col("toks"), col("o"), lit(L))
       val occ = d
         .select(col("doc_id"), col("toks"),

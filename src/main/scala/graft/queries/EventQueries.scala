@@ -22,14 +22,9 @@ object EventQueries {
     Tables.load(s, dir, "events")
 
   /** CEP step bound: each pattern step must follow the previous within
-    * this many minutes (shared by the batch chain and the streaming
-    * operator's replay — they MUST move together). */
+    * this many minutes. */
   private[graft] val CepStepMinutes = 240
 
-  /** The q_cep_first_match chain as a pure frame function over
-    * (user_id, event_type, ts) — so the streaming operator's
-    * finalization replay and the spec's parity check run the IDENTICAL
-    * semantics on the identical rows. */
   /** The three greedy first-match CEP stages per (user, day) — shared
     * by [[cepFirstMatch]] (full matches) and [[cepTimeouts]] (the
     * Flink `within()` timeout side-output). */
@@ -77,8 +72,7 @@ object EventQueries {
   }
 
   /** The q_resample_interpolate body as a pure frame function over
-    * (event_type, ts, value, event_id) — shared with the streaming
-    * operator's parity spec. */
+    * (event_type, ts, value, event_id). */
   private[graft] def resampleInterpolate(e: DataFrame): DataFrame = {
     val b = e
       .groupBy(col("event_type"), date_trunc("minute", col("ts")).as("m"))
@@ -123,11 +117,11 @@ object EventQueries {
     // per type over grid rows only.
     "q_resample_interpolate" -> ((s, dir) => resampleInterpolate(events(s, dir))),
 
-    // idempotent-ingest windowed dedup — the batch form of the
-    // streaming retention contract (StreamingJobs.exactDedupStreaming /
-    // dropDuplicatesWithinWatermark): duplicate payloads within the
-    // same hour collapse to their first event; copies an hour apart
-    // are distinct on purpose (the standard windowed-dedup ruling).
+    // idempotent-ingest windowed dedup — the batch form of Spark's
+    // streaming retention contract (dropDuplicatesWithinWatermark):
+    // duplicate payloads within the same hour collapse to their first
+    // event; copies an hour apart are distinct on purpose (the standard
+    // windowed-dedup ruling).
     // One map-side-combined hash aggregate keyed (digest, bucket) —
     // at 100 TB the bucket is the partition column, so reprocessing a
     // day touches 24 partitions and the dedup never rescans history.
@@ -480,12 +474,11 @@ object EventQueries {
     // match with all three timestamps. Greedy-from-first is the
     // deterministic, constant-state contract (a later view never
     // reopens the pattern once the first view's window lapses) and the
-    // day scope is what bounds streaming state — the live form
-    // ([[graft.streaming.StreamingJobs.cepStreaming]]) buffers a
-    // (user, day) group until the watermark closes the day, replays
-    // this exact chain, and evicts. Same chained conditional-min plan
-    // as the funnel: every shuffle keyed (user, day), map-side
-    // combined, no new shape at 100 TB.
+    // day scope is what would bound a streaming form's state: a
+    // (user, day) group can wait for the watermark to close the day,
+    // replay this exact chain, and be evicted. Same chained
+    // conditional-min plan as the funnel: every shuffle keyed
+    // (user, day), map-side combined, no new shape at 100 TB.
     "q_cep_first_match" -> ((s, dir) => cepFirstMatch(events(s, dir))),
 
     // the timeout SIDE-OUTPUT of the CEP pattern (Flink `within()`
@@ -522,9 +515,8 @@ object EventQueries {
 
     // hourly conversion funnel: the windowed form of q_funnel_stages —
     // stage ordering evaluated WITHIN each (user, hour) scope, so the
-    // metric is streamable with bounded state (see
-    // StreamingJobs.funnelHourlyStreaming: buffer-until-watermark per
-    // (user, hour), evicted at finalization). Same chained
+    // metric is streamable with bounded state (buffer each (user, hour)
+    // until the watermark passes it, then evict it). Same chained
     // conditional-min shape, every shuffle keyed on (user, hour);
     // later stages' hours are subsets of earlier ones, so the hour
     // roll-up is a left-join chain with dense zeros.
@@ -585,11 +577,9 @@ object EventQueries {
     // had not named yet (stream.join(other).where(key).window(tumble)):
     // clicks and purchases of the same user meeting in the same
     // 10-minute tumbling window, aggregated per window. The join key
-    // is (user, window) — a pure equi-join whose window component also
-    // gives the STREAMING twin its state-eviction bound
-    // ([[graft.streaming.StreamingJobs.windowJoinStreaming]], parity
-    // in StreamingSpec). Pair fan-out is bounded by per-user-per-
-    // window activity, never corpus size.
+    // is (user, window) — a pure equi-join whose window component
+    // would also bound a streaming form's state. Pair fan-out is
+    // bounded by per-user-per-window activity, never corpus size.
     "q_window_join" -> ((s, dir) => {
       val ev = events(s, dir)
       val clicks = ev.filter(col("event_type") === "click")

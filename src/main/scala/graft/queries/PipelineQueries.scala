@@ -131,8 +131,7 @@ object PipelineQueries {
         .persist())
 
   /** Hashed unigram+bigram feature buckets of every document —
-    * (doc_id, source, bucket). Shared by the batch DSIR query and the
-    * streaming scorer's frozen-index build. */
+    * (doc_id, source, bucket). */
   private[graft] def dsirBuckets(docs: DataFrame): DataFrame = {
     val tk = docs.select(col("doc_id"), col("source"), tokens(col("text")).as("toks"))
     val bigrams = expr(
@@ -143,31 +142,6 @@ object PipelineQueries {
         explode(concat(col("toks"), bigrams)).as("f"))
       .select(col("doc_id"), col("source"),
         pmod(polyHash31(col("f")), lit(dsirB)).as("bucket"))
-  }
-
-  /** Frozen DSIR importance index from a reference corpus: the
-    * (bucket → fixed-point ratio) map over buckets seen on EITHER side
-    * (full outer — an arriving doc can hash into a target-only bucket)
-    * plus the default ratio for buckets the reference never saw
-    * (t_b = s_b = 0 under the same Laplace smoothing). The collects are
-    * bounded by the index parameter B = 1024, not by data — the same
-    * contract as the ANN index bootstraps. */
-  private[graft] def dsirIndex(ref: DataFrame): (Map[Long, Long], Long) = {
-    val h = dsirBuckets(ref)
-    val t = h.filter(col("source") === "src0")
-      .groupBy("bucket").agg(count(lit(1)).as("tc"))
-    val sc = h.filter(col("source") =!= "src0")
-      .groupBy("bucket").agg(count(lit(1)).as("sc"))
-    def scalar(df: DataFrame): Long =
-      Option(df.head.get(0)).map(_.asInstanceOf[Long]).getOrElse(0L)
-    val ntV = scalar(t.agg(sum(col("tc"))))
-    val nsV = scalar(sc.agg(sum(col("sc"))))
-    val rmap = t.join(sc, Seq("bucket"), "full_outer")
-      .select(col("bucket"),
-        expr(s"(10000L * (coalesce(tc, 0L) + 1L) * (${nsV}L + ${dsirB}L))" +
-          s" div ((coalesce(sc, 0L) + 1L) * (${ntV}L + ${dsirB}L))").as("r"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    (rmap, 10000L * (nsV + dsirB) / (ntV + dsirB))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

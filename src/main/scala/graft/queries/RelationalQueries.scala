@@ -374,7 +374,7 @@ object RelationalQueries {
     // global sort anywhere; ties inside a key are broken by orderkey so
     // the intervals are deterministic. This is the batch construction
     // of the temporal table a stream-side as-of join probes
-    // (q_asof_join / asofEnrichStreaming consume exactly this shape).
+    // (q_asof_join consumes exactly this shape).
     "q_scd2_intervals" -> ((s, dir) => {
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("valid_from"), col("o_orderkey"))
@@ -1573,10 +1573,8 @@ object RelationalQueries {
     * bound degenerates to 0) keeps recall lossless for every length —
     * PropertySpec pins output == brute force on random corpora. */
   /** Distinct character 2-grams of a string column, first-occurrence
-    * order — the ONE gram definition shared by the batch fuzzy join
-    * and [[graft.streaming.StreamingJobs.fuzzyMatchStreaming]]'s
-    * stream-static probe (signatures must agree for the streamed
-    * candidates to hit the same index rows the batch self-join uses).
+    * order — the one gram definition of the batch fuzzy join, so both
+    * sides of its self-join hit the same index rows.
     * The length guard matters: Spark's sequence(1, 0) DESCENDS instead
     * of being empty, so a 1-char name would fabricate a gram (DuckDB's
     * range(1, 1) is empty); such names are caught by the short block.

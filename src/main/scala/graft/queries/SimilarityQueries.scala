@@ -181,9 +181,8 @@ object SimilarityQueries {
     * (session, dir) — every family member reads the same artifact.
     * (This doc covers [[semCentFrames]] + [[semAssigned]] together.)
     */
-  /** The SemDeDup centroid frames, shared verbatim by the batch
-    * assignment ([[semAssigned]]) and the streaming assignment index
-    * ([[graft.streaming.StreamingJobs.semDedupStreaming]]): (k, k₁,
+  /** The SemDeDup centroid frames of the batch assignment
+    * ([[semAssigned]]): (k, k₁,
     * coarse quantizer frame (co_id, co_v, co_nrm), cell-of-centroid
     * frame (cent_id, cv, cnrm, cell)). Pure plan construction — no
     * persist, no collect beyond the ≤64-row rank histogram — so

@@ -65,21 +65,6 @@ object TextQueries {
     * magnitude and the ranking exercises both ends of the curve. */
   private[graft] val Bm25QueryTerms = Seq("dup", "spark", "vector")
 
-  /** Frozen BM25 corpus statistics for the streaming scorer: document
-    * count, total token count, and per-query-term document frequency.
-    * Driver-side, but bounded by |terms| + 2 values — the standard
-    * frozen-index contract, never data-sized. */
-  private[graft] def bm25Stats(d0: DataFrame,
-      terms: Seq[String]): (Long, Long, Map[String, Long]) = {
-    val d = d0.select(col("doc_id"), tokens(col("text")).as("toks"))
-    val r = d.agg(count(lit(1)), sum(size(col("toks")).cast("long"))).collect()(0)
-    val dfs = d.select(explode(array_distinct(col("toks"))).as("tok"))
-      .filter(col("tok").isin(terms: _*))
-      .groupBy("tok").agg(count(lit(1)).as("tdf"))
-      .collect().map(row => row.getString(0) -> row.getLong(1)).toMap
-    (r.getLong(0), r.getLong(1), dfs)
-  }
-
   /** Rational-idf BM25 top-k over a (doc_id, text) frame — the
     * text_bm25_topk body (see its scaladoc for the arithmetic). */
   private[graft] def bm25TopK(d0: DataFrame, terms: Seq[String], k: Int): DataFrame = {
@@ -182,9 +167,7 @@ object TextQueries {
 
   /** The Gopher rule battery as a pure frame function over
     * (doc_id, text) — entirely stateless map-side column arithmetic,
-    * so the SAME plan serves the batch query and the streaming ingest
-    * gate ([[graft.streaming.StreamingJobs.gopherGateStreaming]]);
-    * batch == streaming is a structural fact, and the spec pins it. */
+    * so the same plan would run unchanged on a stream. */
   private[graft] def gopherRules(d0: DataFrame): DataFrame = {
     val d = d0.select(col("doc_id"), col("text"), tokens(col("text")).as("toks"))
     d.select(
@@ -1096,7 +1079,7 @@ object TextQueries {
     // (r17 rejected experiment: stripping only the FIRST/LAST split
     // elements — the only ones carrying residue — via
     // when/concat/slice instead of the per-token transform measured
-    // marginal 0.355 → 0.400 s/round on BpeBench: the branch + the
+    // marginal 0.355 → 0.400 s/round on a rounds benchmark: the branch + the
     // three-array concat cost more than the per-token string copies
     // they avoided. The transform stays.)
     val toksOfEnc = transform(split(col("enc"), d3 + d2),
@@ -1132,7 +1115,7 @@ object TextQueries {
           // (r17 resumed-session rejected experiment: attaching the
           // merge pair via crossJoin(broadcast(1-row frame)) +
           // replace(col, col, col) to "stabilize codegen across
-          // rounds" OOM'd the driver heap on BpeBench's 24-budget —
+          // rounds" OOM'd the driver heap at a 24-round budget —
           // and the premise was wrong anyway: string literals are
           // emitted as references[n] in generated code, so the
           // per-round literal plans already produce identical codegen

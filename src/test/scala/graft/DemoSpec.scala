@@ -161,19 +161,25 @@ class DemoSpec extends SparkSpec {
     assert(StarterDemo.parseArgs(Seq("--job", "StreamJobSingle", "--jdbc", "jdbc:derby:memory:x")) ==
       Map("--job" -> "StreamJobSingle", "--jdbc" -> "jdbc:derby:memory:x"))
     assert(StarterDemo.parseArgs(Nil) == Map.empty)
+    for (source <- Seq("dir:/tmp/feed", "kinesis:s:eu-west-1", "kinesis:s:eu-west-1:TRIM_HORIZON"))
+      assert(StarterDemo.parseArgs(Seq("--source", source)) == Map("--source" -> source))
     for (bad <- Seq(
         Seq("--jbdc", "jdbc:derby:memory:x"), // mistyped flag
         Seq("--job"), // trailing flag without a value
         Seq("--jdbc", "--table", "t"), // flag followed by another flag
-        Seq("StreamJobSingle"))) { // bare value
+        Seq("StreamJobSingle"), // bare value
+        Seq("--source", "kinesis:s"), // no region
+        Seq("--source", "kinesis:"), // no stream
+        Seq("--source", "dir:"))) { // empty path
       intercept[IllegalArgumentException](StarterDemo.parseArgs(bad))
     }
+    val source = intercept[IllegalArgumentException](StarterDemo.parseArgs(Seq("--source", "kinesis:s")))
+    assert(source.getMessage ==
+      "unknown --source: kinesis:s (dir:<path> | kinesis:<stream>:<region>[:<pos>])")
   }
 
   test("month-based intervals are rejected at every interval entry point") {
     val raw = Seq("{}").toDF("value")
-    val docs = spark.emptyDataset[StreamingJobs.BucketDoc]
-    val sigs = spark.emptyDataset[StreamingJobs.SimhashDoc]
     val events = spark.emptyDataset[StreamingJobs.KeyedEvent]
     val cases: Seq[(String, () => Any, String)] = Seq(
       ("StarterDemo sliding interval", () => StarterDemo.buildJob("StreamJobSqlSliding", raw, "1 month"),
@@ -188,10 +194,6 @@ class DemoSpec extends SparkSpec {
       ("StarterDemo negative sliding interval",
         () => StarterDemo.buildJob("StreamJobSqlSliding", raw, "-1 minute"),
         "interval must be non-negative"),
-      ("lsh retention", () => StreamingJobs.lshCandidatesStreaming(docs, retention = "1 month"),
-        "retention must be day-time"),
-      ("simhash retention", () => StreamingJobs.simhashCandidatesStreaming(sigs, retention = "1 month"),
-        "retention must be day-time"),
       ("sliding evictIdleAfter", () => StreamingJobs.slidingCountStreaming(events, 60L, Some("1 month")),
         "evictIdleAfter must be day-time"),
       ("negative evictIdleAfter", () => StreamingJobs.slidingCountStreaming(events, 60L, Some("-1 hour")),

@@ -429,61 +429,6 @@ class PropertySpec extends SparkSpec {
     })
   }
 
-  test("∀ probe perturbations: streaming fuzzy candidates == brute lev ≤ 2 against the catalog") {
-    // the df-ordered rarest-first gram prefix must stay recall-lossless
-    // for arbitrary probes, not just catalog replays
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sql = spark.sqlContext
-    val catalog = Seq("almond antique blue", "almond antique blu", "azure aquamarine",
-      "rose metallic", "rose metalic", "red", "re", "r", "", "navy royal sky",
-      "navy royal skye", "mint").toDF("name")
-    val catalogNames = catalog.as[String].collect().toSeq
-    def lev(a: String, b: String): Int = {
-      val d = Array.tabulate(a.length + 1, b.length + 1)((i, j) =>
-        if (j == 0) i else if (i == 0) j else 0)
-      for (i <- 1 to a.length; j <- 1 to b.length)
-        d(i)(j) = math.min(math.min(d(i - 1)(j) + 1, d(i)(j - 1) + 1),
-          d(i - 1)(j - 1) + (if (a(i - 1) == b(j - 1)) 0 else 1))
-      d(a.length)(b.length)
-    }
-    val probeGen: Gen[String] = for {
-      base <- Gen.oneOf(catalogNames.filter(_.nonEmpty))
-      nEdits <- Gen.choose(0, 2)
-      edited <- (1 to nEdits).foldLeft(Gen.const(base)) { (g, _) =>
-        g.flatMap { s =>
-          for {
-            pos <- Gen.choose(0, math.max(0, s.length - 1))
-            c <- Gen.oneOf('a', 'z', 'q')
-            op <- Gen.oneOf(0, 1, 2)
-          } yield op match {
-            case 0 if s.nonEmpty => s.updated(pos, c)                       // substitute
-            case 1               => s.substring(0, pos) + c + s.substring(pos) // insert
-            case _ if s.nonEmpty => s.substring(0, pos) + s.substring(math.min(pos + 1, s.length)) // delete
-            case _               => s
-          }
-        }
-      }
-    } yield edited
-    check(Prop.forAll(Gen.listOfN(6, probeGen)) { probes =>
-      val in = MemoryStream[String]
-      val q = graft.streaming.StreamingJobs
-        .fuzzyMatchStreaming(in.toDF().toDF("name"), catalog)
-        .writeStream.outputMode("append").format("memory").queryName("fuzzy_prop_out")
-        .start()
-      try {
-        in.addData(probes: _*)
-        q.processAllAvailable()
-        val got = spark.table("fuzzy_prop_out")
-          .select("probe_name", "cat_name", "lev")
-          .as[(String, String, Long)].collect().toSet
-        val expect = probes.toSet.flatMap { (p: String) =>
-          catalogNames.collect { case c if lev(p, c) <= 2 => (p, c, lev(p, c).toLong) }
-        }
-        got == expect
-      } finally q.stop()
-    })
-  }
-
   test("∀ corpora: reservoir cap keeps EXACTLY the k affine-hash-smallest docs per source") {
     val k = 4
     val rowGen = for {
