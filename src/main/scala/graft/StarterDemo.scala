@@ -24,11 +24,12 @@ import graft.streaming.{StreamingJobs, UpsertSink}
   * The one-line swap to the real front door: pass
   * `--source kinesis:<streamName>:<region>[:<initpos>]` and put the
   * awslabs `spark-streaming-sql-kinesis-connector` jar on the
-  * classpath — [[Sources.kinesis]] already emits its option schema.
-  * This container has no connector jar and zero egress, so the demo
-  * (and DemoSpec) runs the file stand-in `--source dir:<path>`, whose
-  * records reach the job as the same raw strings a Kinesis record
-  * would ([[Sources.geojsonLinesDir]]).
+  * classpath — [[Sources.kinesis]] already emits its option schema and
+  * casts each record's `data` payload to the `value` string ingest
+  * reads. The build ships no connector jar, so the demo (and DemoSpec)
+  * runs the file stand-in `--source dir:<path>`, whose one-column
+  * `value` frame is the one [[Sources.kinesis]] returns
+  * ([[Sources.geojsonLinesDir]]).
   */
 object StarterDemo {
 

@@ -32,7 +32,9 @@ object Ingest {
   def parseTimestamp(raw: Column, fallback: Column = current_timestamp()): Column =
     coalesce(try_to_timestamp(raw, lit(Schemas.isoMicros)), fallback)
 
-  /** S2 + P1 — GeoJSON envelope → (railway_class, received_on).
+  /** S2 + P1 — GeoJSON envelope → (railway_class, received_on), read
+    * from the `value: string` column every source hands ingest
+    * ([[graft.sources.Sources]]).
     *
     * The envelope is `coalesce(kernel, from_json)` over the pruned
     * schema: the [[IngestKernels.GeoJsonFields]] kernel validates the
@@ -44,11 +46,8 @@ object Ingest {
     * (StreamJobSqlTumbling.java:106–119) which hand-drops 5 of 7 fields
     * before the shuffle.
     */
-  def parseGeoJson(
-      df: DataFrame,
-      jsonCol: String = "value",
-      fallback: Column = current_timestamp()): DataFrame = {
-    val line = col(jsonCol)
+  def parseGeoJson(df: DataFrame, fallback: Column = current_timestamp()): DataFrame = {
+    val line = col("value")
     val parsed = coalesce(
       Bridge.column(GeoJsonFields(Bridge.expression(line))),
       from_json(line, Schemas.geojsonPruned))

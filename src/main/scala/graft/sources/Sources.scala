@@ -8,8 +8,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (`FlinkKinesisConsumer`, reference StreamJobSqlTumbling.java:41–53,
   * config keys README.MD:113–116). In Spark that is a `readStream`
   * format; everything downstream is source-agnostic, so each helper
-  * here returns a raw DataFrame of opaque string records that the
-  * ingest stage ([[graft.ingest.Ingest.parseGeoJson]]) then shapes.
+  * here returns the same one-column `value: string` frame of opaque
+  * records that the ingest stage ([[graft.ingest.Ingest.parseGeoJson]])
+  * then shapes.
   *
   * This container has no Kinesis connector jar and zero egress, so
   * [[kinesis]] builds the reader without starting it, and the
@@ -42,9 +43,12 @@ object Sources {
     * `streamName`/`region`/`initialPosition` mirror the reference's
     * consumer config keys (reference README.MD:113–116:
     * `inputStreamName`, `region`, `flink.stream.initpos`); position
-    * values `LATEST` and `TRIM_HORIZON` map 1:1. The connector jar is
-    * not present in this container (zero egress), so this builder is
-    * exercised up to `load()` wiring only.
+    * values `LATEST` and `TRIM_HORIZON` map 1:1. The connector documents
+    * each record's payload as a binary `data` column (next to
+    * `streamName`, `partitionKey`, `sequenceNumber` and
+    * `approximateArrivalTimestamp`); it is cast to the `value` string
+    * that [[geojsonLinesDir]] yields. The build ships no connector jar,
+    * so the tests exercise this builder up to `load()` wiring only.
     */
   def kinesis(
       spark: SparkSession,
@@ -54,6 +58,7 @@ object Sources {
     spark.readStream.format(KinesisFormat)
       .options(kinesisOptions(streamName, region, initialPosition))
       .load()
+      .selectExpr("CAST(data AS STRING) AS value")
 
   /** Streaming text source over a directory of GeoJSON-lines files —
     * the closest connector-free stand-in for [[kinesis]]: like a

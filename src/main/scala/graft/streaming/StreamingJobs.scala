@@ -72,44 +72,18 @@ object StreamingJobs {
     * ([[Windows.slidingCountChunked]]) is the right offline tool; this
     * operator is for live streams.
     *
-    * State is frame-bounded per ACTIVE key, but by default a key that
-    * stops arriving parks its last buffer forever — on a feed with
-    * unbounded key churn (session ids, request ids) that is an OOM on a
-    * long enough horizon. Pass `evictIdleAfter` (requires a caller-set
-    * event-time watermark on `events`) to drop a key's state once the
-    * watermark passes its newest event by frame + evictIdleAfter: by
-    * then every buffered timestamp is outside any future event's frame
-    * AND the watermark itself already drops events at or below the old
-    * per-key max, so eviction cannot change any output — it only
-    * bounds state by retention-window key occupancy.
+    * State keeps one frame buffer per key ever seen, with no timeout:
+    * the railway keys are the bounded set of `N02_001` classes.
     */
-  def slidingCountStreaming(
-      events: Dataset[KeyedEvent],
-      frameSeconds: Long,
-      evictIdleAfter: Option[String] = None): Dataset[SlidingCount] = {
+  def slidingCountStreaming(events: Dataset[KeyedEvent], frameSeconds: Long): Dataset[SlidingCount] = {
     import events.sparkSession.implicits._
     val frameUs = frameSeconds * 1000000L
-    val evictMs = evictIdleAfter.map { d =>
-      val idleUs = dayTimeMicros("evictIdleAfter", d)
-      // a negative retention would place the timeout before maxSeen +
-      // frame: at best an IllegalArgumentException mid-stream, at worst
-      // silent eviction of buffers still inside future events' frames
-      require(idleUs >= 0, s"evictIdleAfter must be non-negative, got: $d")
-      frameSeconds * 1000L + idleUs / 1000L
-    }
-    val timeoutConf =
-      if (evictMs.isDefined) GroupStateTimeout.EventTimeTimeout
-      else GroupStateTimeout.NoTimeout
-
     // grouping on the column skips groupByKey's AppendColumns
     // deserialize pass; the shuffle hashes the same key string
     events.toDF().groupBy(col("key")).as[String, KeyedEvent]
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf) {
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (key: String, rows: Iterator[KeyedEvent], state: GroupState[SlidingState]) =>
-          if (state.hasTimedOut) {
-            state.remove() // watermark passed newest event + frame + idle retention
-            Iterator.empty
-          } else slidingBatch(key, rows, state, frameUs, evictMs)
+          slidingBatch(key, rows, state, frameUs)
       }
   }
 
@@ -123,8 +97,7 @@ object StreamingJobs {
     t
   }
 
-  /** One micro-batch of the sliding OVER state machine (split out so the
-    * timed-out branch above stays a two-liner).
+  /** One micro-batch of the sliding OVER state machine.
     *
     * The frame is one ascending window `win[lo, hi)` over an array sized
     * to the old state plus the batch: an accepted event advances `lo`
@@ -133,7 +106,7 @@ object StreamingJobs {
     * at most twice per batch. */
   private def slidingBatch(
       key: String, rows: Iterator[KeyedEvent], state: GroupState[SlidingState],
-      frameUs: Long, evictMs: Option[Long]): Iterator[SlidingCount] = {
+      frameUs: Long): Iterator[SlidingCount] = {
     val st = state.getOption.getOrElse(SlidingState(Long.MinValue, Nil))
     // stable sort (TimSort): equal-ts peers keep their input order
     val batch = rows.map(e => (micros(e.ts), e)).toArray.sortBy(_._1)
@@ -168,11 +141,6 @@ object StreamingJobs {
     var buf: List[Long] = Nil
     (lo until hi).foreach(p => buf = win(p) :: buf)
     state.update(SlidingState(maxSeen, buf))
-    // rows older than the watermark never reach the operator, so
-    // maxSeen ≥ watermark and the timeout is always in the future
-    evictMs.foreach { ms =>
-      if (maxSeen != Long.MinValue) state.setTimeoutTimestamp(maxSeen / 1000L + ms)
-    }
     out.result().iterator
   }
 

@@ -26,16 +26,13 @@ import org.apache.spark.sql.{DataFrame, Row}
   * One executing backend: any JDBC database, one transaction per
   * statement batch, reaching the same converged state as a native
   * `INSERT … ON CONFLICT` upsert on targets that have none (Derby, which
-  * the demo and every sink test run against):
-  *
-  *  - when the table's primary key is exactly the upsert-key set, each
-  *    batch is written INSERT-first; only a batch that fails with an
-  *    integrity violation (SQLState class 23) is rolled back and
-  *    rewritten as DELETE-keys + INSERT. A fresh key costs one INSERT
-  *    instead of a DELETE probe plus an INSERT;
-  *  - any other table gets DELETE-keys + INSERT on every batch — without
-  *    a key constraint to reject it, an INSERT-first replay would
-  *    duplicate rows.
+  * the demo and every sink test run against). The table's primary key
+  * must be exactly the upsert-key set — the constraint the reference's
+  * `ON CONFLICT ON CONSTRAINT tumbling_pkey` names — because one write
+  * path relies on it: each batch is written INSERT-first, and only a
+  * batch that the key rejects (SQLState class 23) is rolled back and
+  * rewritten as DELETE-keys + INSERT. A fresh key costs one INSERT
+  * instead of a DELETE probe plus an INSERT.
   *
   * The cost of INSERT-first: in update mode every re-emitted window
   * conflicts, so its batch pays one failed INSERT batch plus the
@@ -117,13 +114,14 @@ object UpsertSink {
     *
     *  - one connection per partition task, opened executor-side (the
     *    url string is the only thing serialized into the closure); it
-    *    reads the table's primary key once;
-    *  - per statement batch of up to 500 rows, then COMMIT: if the
-    *    primary key is exactly `keyCols`, INSERT all rows, and on a
-    *    class-23 failure roll back that batch and rewrite it as below;
-    *    otherwise DELETE all keys, then INSERT all rows. Either way a
-    *    replayed epoch rewrites identical rows instead of duplicating
-    *    them: exactly-once to the table;
+    *    reads the table's primary key once, and a key other than exactly
+    *    `keyCols` fails the partition with an IllegalArgumentException
+    *    before any row is written;
+    *  - per statement batch of up to 500 rows, then COMMIT: INSERT all
+    *    rows, and on a class-23 failure roll back that batch and rewrite
+    *    it as DELETE all keys, then INSERT all rows. A replayed epoch
+    *    rewrites identical rows instead of duplicating them:
+    *    exactly-once to the table;
     *  - rows of one statement batch with equal keys collapse to the
     *    last of them (the per-row OVER jobs emit one identical row per
     *    equal-timestamp peer);
@@ -150,7 +148,10 @@ object UpsertSink {
         conn.setAutoCommit(false)
         try {
           val id = Idents(conn)
-          val insertFirst = primaryKey(conn, id, table) == keyCols.map(id.stored).toSet
+          val pk = primaryKey(conn, id, table)
+          require(pk == keyCols.map(id.stored).toSet,
+            s"sink table $table must have primary key (${keyCols.mkString(", ")}), " +
+              s"found (${pk.toSeq.sorted.mkString(", ")})")
           Using.resources(conn.prepareStatement(deleteSql(id, table, keyCols)),
               conn.prepareStatement(insertSql(id, table, cols))) { (delSt, insSt) =>
             rows.grouped(BatchRows).foreach { batch =>
@@ -169,8 +170,7 @@ object UpsertSink {
                 insSt.executeBatch()
                 conn.commit()
               }
-              if (!insertFirst) write(deleteFirst = true)
-              else try write(deleteFirst = false) catch {
+              try write(deleteFirst = false) catch {
                 case e: SQLException if isConstraintViolation(e) =>
                   insSt.clearBatch()
                   conn.rollback() // this batch only: earlier ones are committed

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryException
 
 import graft.ingest.Ingest
 import graft.ops.Windows
@@ -155,6 +156,22 @@ class DemoSpec extends SparkSpec {
     val rows = DerbyTables.rows("demo_ddl", "key", "ts", "trailing_cnt")
     assert(rows.size == 20) // 1-s steps: every event has its own (key, ts)
     assert(rows.map(_(2).asInstanceOf[Long]).sum >= 20L)
+
+    // an existing table keyed on `key` alone is refused, not written:
+    // one event per class, so no row would even conflict on that key
+    val keyOnly = Files.createTempDirectory("graft_demo_feed_keyonly")
+    Files.write(keyOnly.resolve("a.json"), Seq("11", "14", "18").zipWithIndex.map { case (cls, i) =>
+      s"""{"type":"Feature","properties":{"RECEIVED_ON":"2020-09-14T09:20:0$i.000000","N02_001":"$cls"}}"""
+    }.mkString("\n").getBytes("UTF-8"))
+    DerbyTables.create("demo_keyonly",
+      """"KEY" VARCHAR(256) NOT NULL, ts TIMESTAMP NOT NULL, trailing_cnt BIGINT, PRIMARY KEY ("KEY")""")
+    val q = StarterDemo.start("StreamJobSingle", Sources.geojsonLinesDir(spark, keyOnly.toString),
+      interval = "30 minutes", checkpointDir = Files.createTempDirectory("graft_demo_ckpt_keyonly").toString,
+      sinkTable = "demo_keyonly", jdbcUrl = DerbyTables.url)
+    val e = try intercept[StreamingQueryException](q.processAllAvailable()) finally q.stop()
+    assert(e.getMessage.contains("sink table demo_keyonly must have primary key (key, ts), found (KEY)"),
+      e.getMessage)
+    assert(DerbyTables.rows("demo_keyonly", "key").isEmpty)
   }
 
   test("CLI flags parse into options; unknown flags and missing values are rejected") {
@@ -193,11 +210,7 @@ class DemoSpec extends SparkSpec {
         "interval must be a whole number of seconds"),
       ("StarterDemo negative sliding interval",
         () => StarterDemo.buildJob("StreamJobSqlSliding", raw, "-1 minute"),
-        "interval must be non-negative"),
-      ("sliding evictIdleAfter", () => StreamingJobs.slidingCountStreaming(events, 60L, Some("1 month")),
-        "evictIdleAfter must be day-time"),
-      ("negative evictIdleAfter", () => StreamingJobs.slidingCountStreaming(events, 60L, Some("-1 hour")),
-        "evictIdleAfter must be non-negative"))
+        "interval must be non-negative"))
     for ((name, call, message) <- cases) {
       val e = intercept[IllegalArgumentException](call())
       assert(e.getMessage.contains(message), s"$name: ${e.getMessage}")

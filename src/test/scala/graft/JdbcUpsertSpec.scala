@@ -46,22 +46,29 @@ class JdbcUpsertSpec extends SparkSpec {
   }
 
   test("JDBC upsert is idempotent under epoch replay") {
-    // a primary key equal to the upsert key lets the sink write
-    // INSERT-first; a table without one must be written DELETE-first,
-    // or the replay would duplicate every row
+    // a primary key equal to the upsert key turns the replayed
+    // INSERT-first batch into a DELETE+INSERT rewrite; a table keyed
+    // any other way is refused before any row is written
     val tumbled = Windows.tumblingCount(
       Tables.load(spark, sf0001, "events"), $"ts", $"event_type", "1 minute")
-    Seq("t_replay" -> TumblingColumns, "t_replay_nokey" -> TumblingColumnsNoKey).foreach {
-      case (table, columns) =>
-        DerbyTables.create(table, columns)
-        val sink = UpsertSink.jdbcForeachBatchUpsert(url, table, tumblingKey) _
-        sink(tumbled, 0L)
-        val afterFirst = windowCounts(table)
-        sink(tumbled, 0L) // replayed epoch: same data, same epoch id
-        assert(windowCounts(table) == afterFirst, table)
-        val keys = DerbyTables.rows(table, "key", "window_start", "window_end")
-        assert((table, keys.size, keys.distinct.size) == ((table, tumbled.count(), tumbled.count())))
-    }
+    DerbyTables.create("t_replay", TumblingColumns)
+    val sink = UpsertSink.jdbcForeachBatchUpsert(url, "t_replay", tumblingKey) _
+    sink(tumbled, 0L)
+    val afterFirst = windowCounts("t_replay")
+    sink(tumbled, 0L) // replayed epoch: same data, same epoch id
+    assert(windowCounts("t_replay") == afterFirst)
+    val keys = DerbyTables.rows("t_replay", "key", "window_start", "window_end")
+    assert((keys.size, keys.distinct.size) == ((tumbled.count(), tumbled.count())))
+
+    DerbyTables.create("t_replay_nokey", TumblingColumnsNoKey)
+    val e = intercept[Exception](
+      UpsertSink.jdbcForeachBatchUpsert(url, "t_replay_nokey", tumblingKey)(tumbled, 0L))
+    val refusal = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case i: IllegalArgumentException => i.getMessage }
+    assert(refusal.exists(_.contains(
+      "sink table t_replay_nokey must have primary key (key, window_start, window_end), found ()")),
+      s"no refusal in: $e")
+    assert(DerbyTables.rows("t_replay_nokey", "key").isEmpty)
   }
 
   test("restart from checkpoint resumes into Derby without duplicate rows (F1+X3)") {

@@ -7,14 +7,14 @@ import org.apache.spark.sql.functions._
 
 import graft.ingest.Ingest
 import graft.ops.Windows
-import graft.streaming.UpsertSink
 
 /** The reference's flagship pipeline end-to-end on its own wire format:
   * GeoJSON Feature strings (FIXTURES.md §1, reference send.py:8–22) →
   * `from_json` projection → event-time watermark → 1-minute tumbling
   * count per railway class → idempotent upsert keyed on
   * (class, window_start, window_end) — the full
-  * StreamJobSqlTumbling.java:100–177 shape, streaming and batch, with
+  * StreamJobSqlTumbling.java:100–177 shape, batch and streaming (the
+  * streaming half through [[StarterDemo.start]]), with
   * the converged store checked against the batch answer (the
   * reference's own observable contract is the upserted table,
   * SURVEY.md §1.4).
@@ -53,18 +53,16 @@ class ReferenceParitySpec extends SparkSpec {
     implicit val sql = spark.sqlContext
     DerbyTables.create("rail_tumbling", DerbyTables.TumblingColumns)
     val in = MemoryStream[String]
-    val pipeline = Windows.tumblingCount(
-      Ingest.withEventTime(Ingest.parseGeoJson(in.toDF().toDF("value")), "received_on"),
-      $"received_on", $"railway_class", "1 minute")
-    val q = pipeline.writeStream.outputMode("append")
-      .foreachBatch(UpsertSink.jdbcForeachBatchUpsert(DerbyTables.url, "rail_tumbling",
-        Seq("key", "window_start", "window_end")) _)
-      .start()
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_rail_ckpt").toString
+    val q = StarterDemo.start("StreamJobSqlTumbling", in.toDF(), "1 minute", ckpt, "rail_tumbling",
+      DerbyTables.url)
     try {
       val (b1, b2) = wire.splitAt(3)
       in.addData(b1); q.processAllAvailable()
       in.addData(b2); q.processAllAvailable()
-      // push the watermark past every window end so all windows emit
+      // class 11's sentinel closes its windows in the batch that reads
+      // it; the watermark it sets flushes the quiet classes' windows in
+      // the no-data batch after it
       in.addData(geojson("11", "2020-09-14T10:00:00.000000")); q.processAllAvailable()
       val store = DerbyTables.windowCounts("rail_tumbling")
       val batch = Windows.tumblingCount(

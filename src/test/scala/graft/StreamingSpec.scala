@@ -21,49 +21,6 @@ class StreamingSpec extends SparkSpec {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
-  test("streaming tumbling count converges to the batch result (append mode)") {
-    implicit val sql = spark.sqlContext
-    val in = MemoryStream[(String, Timestamp)]
-    val events = Ingest.withEventTime(in.toDF().toDF("k", "t"), "t")
-    val q = Windows.tumblingCount(events, $"t", $"k", "1 minute")
-      .writeStream.outputMode("append")
-      .format("memory").queryName("tumbling_out")
-      .start()
-    try {
-      in.addData(("a", ts("2024-01-01 00:00:10")), ("a", ts("2024-01-01 00:00:20")), ("b", ts("2024-01-01 00:00:30")))
-      q.processAllAvailable()
-      in.addData(("a", ts("2024-01-01 00:01:10")))
-      q.processAllAvailable()
-      // watermark (0 s) has passed 00:01 → the 00:00 window is final and emitted
-      in.addData(("a", ts("2024-01-01 00:02:05")))
-      q.processAllAvailable()
-      val emitted = spark.table("tumbling_out")
-        .select("key", "cnt", "window_start").as[(String, Long, Timestamp)].collect().toSet
-      assert(emitted.contains(("a", 2L, ts("2024-01-01 00:00:00"))))
-      assert(emitted.contains(("b", 1L, ts("2024-01-01 00:00:00"))))
-      assert(emitted.contains(("a", 1L, ts("2024-01-01 00:01:00"))))
-    } finally q.stop()
-  }
-
-  test("streaming hopping count emits every overlapping window (append mode)") {
-    implicit val sql = spark.sqlContext
-    val in = MemoryStream[(String, Timestamp)]
-    val q = Windows.hoppingCount(Ingest.withEventTime(in.toDF().toDF("k", "t"), "t"),
-        $"t", $"k", "2 minutes", "1 minute")
-      .writeStream.outputMode("append").format("memory").queryName("hop_out").start()
-    try {
-      in.addData(("a", ts("2024-01-01 00:01:30")))
-      q.processAllAvailable()
-      in.addData(("a", ts("2024-01-01 00:10:00"))) // advance watermark far past both windows
-      q.processAllAvailable()
-      in.addData(("a", ts("2024-01-01 00:20:00")))
-      q.processAllAvailable()
-      val w = spark.table("hop_out").filter($"cnt" === 1 && $"window_start" < ts("2024-01-01 00:05:00"))
-        .select("window_start").as[Timestamp].collect().toSet
-      assert(w == Set(ts("2024-01-01 00:00:00"), ts("2024-01-01 00:01:00")))
-    } finally q.stop()
-  }
-
   test("observe metric reports emitted rows per batch (P6 logging parity)") {
     implicit val sql = spark.sqlContext
     def line(cls: String, iso: String) =
@@ -113,28 +70,6 @@ class StreamingSpec extends SparkSpec {
       line("18", "2020-09-14T09:22:00.000000")))) == Seq(2L, 3L))
   }
 
-  test("late record (older than watermark) is dropped — zero-lateness parity") {
-    implicit val sql = spark.sqlContext
-    val in = MemoryStream[(String, Timestamp)]
-    val q = Windows.tumblingCount(Ingest.withEventTime(in.toDF().toDF("k", "t"), "t"),
-        $"t", $"k", "1 minute")
-      .writeStream.outputMode("append").format("memory").queryName("late_out").start()
-    try {
-      in.addData(("a", ts("2024-01-01 00:00:10")))
-      q.processAllAvailable()
-      in.addData(("a", ts("2024-01-01 00:05:00"))) // advances watermark past 00:01
-      q.processAllAvailable()
-      in.addData(("a", ts("2024-01-01 00:00:40"))) // late for the closed 00:00 window
-      q.processAllAvailable()
-      in.addData(("a", ts("2024-01-01 00:10:00"))) // close remaining windows
-      q.processAllAvailable()
-      val w0 = spark.table("late_out")
-        .filter($"window_start" === ts("2024-01-01 00:00:00") && $"key" === "a")
-        .select("cnt").as[Long].collect()
-      assert(w0.toSeq == Seq(1L), "late record must not re-open the closed window")
-    } finally q.stop()
-  }
-
   test("flatMapGroupsWithState sliding OVER matches batch OVER on in-order feed") {
     implicit val sql = spark.sqlContext
     // 6 micro-batches of 40 s event time each against a 60-s frame: every
@@ -165,77 +100,6 @@ class StreamingSpec extends SparkSpec {
       val want = sorted(Windows.slidingOverCount(batches.flatten.toDF(), $"ts", $"key", 60L))
       assert(got.size == batches.map(_.size).sum)
       assert(got == want)
-    } finally q.stop()
-  }
-
-  test("sliding OVER evicts idle keys once the watermark passes frame + idle retention") {
-    implicit val sql = spark.sqlContext
-    val in = MemoryStream[KeyedEvent]
-    val q = slidingCountStreaming(
-        in.toDS().withWatermark("ts", "0 seconds"), 60L, evictIdleAfter = Some("1 minute"))
-      .writeStream.outputMode("append").format("memory").queryName("sliding_evict").start()
-    try {
-      in.addData(KeyedEvent("a", ts("2024-01-01 00:00:10.0")),
-        KeyedEvent("b", ts("2024-01-01 00:00:20.0")))
-      q.processAllAvailable()
-      // advance the watermark far past a's timeout (00:02:10); timeouts
-      // fire on the batch AFTER the watermark moves, so run two more
-      in.addData(KeyedEvent("b", ts("2024-01-01 01:00:00.0")))
-      q.processAllAvailable()
-      in.addData(KeyedEvent("b", ts("2024-01-01 02:00:00.0")))
-      q.processAllAvailable()
-      val stateRows = q.recentProgress
-        .filter(_.stateOperators.nonEmpty).map(_.stateOperators(0).numRowsTotal)
-      assert(stateRows.nonEmpty && stateRows.last == 1L,
-        s"idle key not evicted, state-row history: ${stateRows.mkString(",")}")
-      // eviction must not change emitted results: every event was the
-      // only one inside its own trailing frame
-      val got = spark.table("sliding_evict")
-        .select($"key", $"trailing_cnt").as[(String, Long)].collect()
-      assert(got.length == 4 && got.forall(_._2 == 1L), got.mkString(","))
-    } finally q.stop()
-  }
-
-  test("sliding OVER state tracks live keys under 10× key churn (scale guard)") {
-    // 10 generations of 20 fresh keys each, 10 minutes apart — every
-    // generation goes idle long before the next (frame 60s + idle
-    // retention 60s). On an unbounded feed this is the state contract
-    // that matters: rows must track the LIVE key set, never the
-    // cumulative 200 keys the stream has seen.
-    implicit val sql = spark.sqlContext
-    val in = MemoryStream[KeyedEvent]
-    val q = slidingCountStreaming(
-        in.toDS().withWatermark("ts", "0 seconds"), 60L, evictIdleAfter = Some("1 minute"))
-      .writeStream.outputMode("append").format("memory").queryName("sliding_churn").start()
-    try {
-      val base = ts("2024-01-01 00:00:00.0").getTime
-      val gens = 10
-      val keysPerGen = 20
-      (0 until gens).foreach { g =>
-        val t = new Timestamp(base + g * 600000L)
-        in.addData((0 until keysPerGen).map(i => KeyedEvent(s"g${g}_k$i", t)): _*)
-        q.processAllAvailable()
-      }
-      // two watermark pushes let the final generation's timeouts fire
-      // (event-time timeouts run on the batch AFTER the watermark moves)
-      in.addData(KeyedEvent("pusher", new Timestamp(base + gens * 600000L)))
-      q.processAllAvailable()
-      in.addData(KeyedEvent("pusher", new Timestamp(base + (gens + 1) * 600000L)))
-      q.processAllAvailable()
-      val stateRows = q.recentProgress
-        .filter(_.stateOperators.nonEmpty).map(_.stateOperators(0).numRowsTotal)
-      assert(stateRows.nonEmpty)
-      // timeouts fire one batch late, so at most the incoming + the
-      // not-yet-evicted previous generation coexist — never the 200
-      // cumulative keys
-      assert(stateRows.max <= 2L * keysPerGen + 1,
-        s"state peaked at ${stateRows.max} (history: ${stateRows.mkString(",")})")
-      assert(stateRows.last <= keysPerGen + 1,
-        s"dead generations accumulated: ${stateRows.mkString(",")}")
-      // churn must not corrupt results: every event is alone in its frame
-      val got = spark.table("sliding_churn").as[SlidingCount].collect()
-      assert(got.length == gens * keysPerGen + 2)
-      assert(got.forall(_.trailing_cnt == 1L))
     } finally q.stop()
   }
 
